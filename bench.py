@@ -131,11 +131,10 @@ def run_cdc_replay(
     src = EpochSource.from_parquet(spark, events_path)
     n_events = src._df.count()
     # the bench stream caps content at 256 B, so the full-width argmax
-    # shuffle carries barely more than the slim version pre-pass and skips
-    # the serial broadcast build — measured ~1.8x faster end-to-end AND
-    # near-linear 1->4 scaling. The broadcast route pays off when content is
-    # KB-sized (it keeps content out of the shuffle entirely); both paths
-    # stay selectable (ReplayConfig.dedup_strategy).
+    # shuffle carries barely more than a slim version pre-pass — measured
+    # ~1.8x faster end-to-end than a broadcast slim-version route AND
+    # near-linear 1->4 scaling. Other strategies stay selectable
+    # (ReplayConfig.dedup_strategy).
     cfg = ReplayConfig(
         warehouse=warehouse,
         num_buckets=num_buckets,

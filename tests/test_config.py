@@ -16,16 +16,16 @@ def test_defaults():
 
 def test_file_then_env_then_cli(tmp_path):
     f = tmp_path / "cfg.yaml"
-    f.write_text("num_buckets: 64\nsalt_buckets: 4\ndedup_strategy: shuffle\n")
+    f.write_text("num_buckets: 64\nsalt_buckets: 4\ndedup_strategy: fused\n")
     env = {"WAGE_ETL_SALT_BUCKETS": "8", "WAGE_ETL_KEEP_TOMBSTONES": "true"}
     cfg = load_config(
-        cli_overrides={"salt_buckets": None, "dedup_strategy": "broadcast"},
+        cli_overrides={"salt_buckets": None, "dedup_strategy": "auto"},
         config_file=str(f),
         env=env,
     )
     assert cfg.num_buckets == 64           # file layer
     assert cfg.salt_buckets == 8           # env overrides file; None CLI ignored
-    assert cfg.dedup_strategy == "broadcast"  # CLI overrides env/file
+    assert cfg.dedup_strategy == "auto"  # CLI overrides env/file
     assert cfg.keep_tombstones is True     # env bool coercion
 
 
@@ -36,6 +36,14 @@ def test_json_file_and_env_pointer(tmp_path):
     assert cfg.warehouse == "/lake/wh" and cfg.max_epochs == 3
     rc = cfg.replay_config()
     assert rc.warehouse == "/lake/wh" and rc.max_epochs == 3
+
+
+def test_unknown_dedup_strategy_rejected():
+    """Strategies removed from the engine (e.g. broadcast, defer) fail
+    loudly instead of silently running another one."""
+    cfg = load_config(cli_overrides={"warehouse": "/lake/wh", "dedup_strategy": "defer"}, env={})
+    with pytest.raises(ValueError, match="unknown dedup_strategy 'defer'"):
+        cfg.replay_config()
 
 
 def test_unknown_key_rejected(tmp_path):

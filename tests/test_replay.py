@@ -51,9 +51,9 @@ def test_manifest_counters_match_oracle(spark, warehouse):
     statuses = {r["status"] for r in m.collect()}
     assert statuses <= {"SUCCESS", "PARTIAL", "FAILED"}
     assert "PARTIAL" in statuses  # invalid_frac>0 -> some epoch had rejects
-    # rows_loaded = epoch-sourced winners (deletes included); rows_merged =
-    # rewritten-bucket totals (carried-over rows included). loaded is
-    # bounded by the epoch's valid events, merged is not comparable to it.
+    # rows_loaded = the epoch's valid events; rows_merged = rewritten-bucket
+    # totals (carried-over rows included). loaded is bounded by the epoch's
+    # valid events, merged is not comparable to it.
     for r in m.collect():
         assert r["rows_loaded"] is not None
         assert r["rows_loaded"] <= r["events_in"] - r["rows_quarantined"]
@@ -96,10 +96,10 @@ def test_seed_matrix_oracle_equality(spark, warehouse, seed):
 
 
 def test_shuffle_fallback_dedup_matches_oracle(spark, warehouse):
-    """broadcast_key_limit=0 forces the 10^10-scale argmax-shuffle path;
-    result must be identical to the broadcast path and the oracle."""
+    """dedup_strategy='shuffle' runs the argmax-shuffle route + merge_apply
+    path; result must be identical to the oracle."""
     ev = synthesize_events(spark, n_events=3000, n_keys=150, n_epochs=2, invalid_frac=0.05)
-    cfg = ReplayConfig(warehouse=warehouse, num_buckets=8, broadcast_key_limit=0)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=8, dedup_strategy="shuffle")
     replay(spark, cfg, EpochSource(ev))
     target, dlq, manifest = open_tables(spark, cfg)
     oracle_state, n_valid, n_quar = replay_oracle([r.asDict() for r in ev.collect()])
@@ -212,11 +212,11 @@ def test_verify_state_null_key_component_matches(spark, warehouse):
 import pytest
 
 
-@pytest.mark.parametrize("strategy", ["defer", "fused"])
+@pytest.mark.parametrize("strategy", ["shuffle", "fused"])
 def test_alternate_strategies_match_oracle(spark, warehouse, strategy):
-    """dedup_strategy='defer' (route stages every valid event, zero route
-    shuffles, MERGE's bucket-local sort resolves LWW) and 'fused' (ONE Spark
-    job per epoch: target state unioned with events, single bucket
+    """dedup_strategy='shuffle' (argmax shuffle routes the winners, MERGE
+    splices them into the touched buckets) and 'fused' (ONE write job per
+    epoch: whole target state unioned with events, single bucket
     repartition, file adoption for both DLQ and target) must both equal the
     per-epoch oracle, including the duplicate-event fixture rows."""
     ev = synthesize_events(spark, n_events=4000, n_keys=250, n_epochs=3, invalid_frac=0.05)
@@ -328,3 +328,81 @@ def test_rebucket_retriggers_on_resume_after_crash_before_rebucket(spark, wareho
     oracle_state, _nv, _nq = replay_oracle([r.asDict() for r in ev.collect()])
     report = verify_state(spark, target, sha_map(oracle_state))
     assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _sparse_stream(spark, boot=3000, tail=15):
+    """A bootstrap epoch 0 and one tiny epoch 1 over a wide keyspace."""
+    ev = synthesize_events(
+        spark, n_events=boot + tail, n_keys=2000, n_epochs=1, invalid_frac=0.03
+    )
+    return ev.withColumn(
+        "epoch", F.when(F.col("event_seq") < boot, 0).otherwise(1).cast("long")
+    )
+
+
+def test_sparse_auto_epoch_is_pruned_and_four_jobs(spark, warehouse):
+    """The default ``auto`` strategy applies a sparse epoch with the fused
+    LWW plan pruned to its touched buckets: at most 4 Spark jobs (the
+    per-bucket count and the write, each a map stage plus a result stage),
+    every untouched bucket keeps its exact file list, and the final state
+    still equals the oracle."""
+    from wage_etl_spark.lake.table import bucket_expr
+
+    ev = _sparse_stream(spark)
+    src = EpochSource(ev)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=32)
+    assert cfg.dedup_strategy == "auto"
+    replay(spark, ReplayConfig(warehouse=warehouse, num_buckets=32, max_epochs=1), src)
+    target, dlq, manifest = open_tables(spark, cfg)
+    before = target.snapshot()
+
+    j0 = _next_job_id(spark)
+    res = replay(spark, cfg, src)
+    jobs = _next_job_id(spark) - j0
+    assert [r["epoch"] for r in res] == [1]
+    assert jobs <= 4, jobs
+
+    epoch_buckets = {
+        r["_b"]
+        for r in ev.filter("epoch = 1").select(bucket_expr(["repo", "path"], 32).alias("_b")).collect()
+    }
+    assert 0 < len(epoch_buckets) < 32
+    after = target.snapshot()
+    for b in set(before.files) | set(after.files):
+        if int(b) not in epoch_buckets:
+            assert after.files.get(b) == before.files.get(b), b
+    assert any(after.files.get(str(b)) != before.files.get(str(b)) for b in epoch_buckets)
+    # the manifest's per-partition rows name only rewritten buckets
+    parts = manifest.read().filter("epoch = 1 AND partition_id IS NOT NULL").collect()
+    assert {r["partition_id"] for r in parts} <= epoch_buckets
+
+    oracle_state, _, n_quar = replay_oracle([r.asDict() for r in ev.collect()])
+    report = verify_state(spark, target, sha_map(oracle_state))
+    assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
+    assert dlq.read().count() == n_quar
+
+
+def test_empty_auto_epoch_keeps_file_map(spark, warehouse):
+    """An epoch with no events still commits (DLQ, target, manifest), and
+    the target's file map is unchanged. Finding it empty is the per-bucket
+    count (a map stage and a result stage); nothing is written."""
+    from wage_etl_spark.streaming.replay import apply_epoch
+
+    ev = _sparse_stream(spark, tail=0)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=8)
+    replay(spark, cfg, EpochSource(ev))
+    target, dlq, manifest = open_tables(spark, cfg)
+    before, v0 = target.snapshot(), target.current_version()
+
+    empty = ev.filter(F.lit(False))
+    j0 = _next_job_id(spark)
+    res = apply_epoch(spark, cfg, target, dlq, manifest, empty, 1, 2)
+    assert _next_job_id(spark) - j0 <= 2
+    assert res["events_in"] == 0 and res["status"] == "SUCCESS"
+    assert target.current_version() == v0 + 1
+    assert target.snapshot().files == before.files
+    assert last_committed_epoch(manifest) == 1

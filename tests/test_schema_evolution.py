@@ -4,6 +4,7 @@ column, /root/reference/sql/migrations/V008__ALTER_county_fips_and_add_year.sql)
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wage_etl_spark.sources.events import EpochSource
@@ -48,7 +49,8 @@ def test_column_appears_mid_stream(spark, warehouse):
 
 def test_rename_after_evolution(spark, warehouse):
     """Renamed columns (north star: 'added/renamed columns') — rename the
-    evolved column, reads remap, subsequent merges keep working."""
+    evolved column and reads remap. Replaying more epochs onto the renamed
+    table is refused (test_replay_onto_renamed_columns_fails_loudly)."""
     ev = synthesize_events(spark, **SYNTH)
     cfg = ReplayConfig(warehouse=warehouse, num_buckets=8)
     replay(spark, cfg, EpochSource(ev))
@@ -57,6 +59,29 @@ def test_rename_after_evolution(spark, warehouse):
     df = target.read()
     assert "language_version" in df.columns and "lang_version" not in df.columns
     assert df.filter(F.col("language_version").isNotNull()).count() > 0
+
+
+@pytest.mark.parametrize("old,new", [("lang", "language"), ("lang_version", "language_version")])
+def test_replay_onto_renamed_columns_fails_loudly(spark, warehouse, old, new):
+    """Change events carry the original column names, so replay/apply_epoch
+    onto a target with renamed columns raises a clear ValueError before the
+    DLQ, target or manifest gets a snapshot."""
+    from wage_etl_spark.lake.manifest import next_run_id
+    from wage_etl_spark.streaming.replay import apply_epoch
+
+    ev = synthesize_events(spark, **SYNTH)
+    src = EpochSource(ev)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=8)
+    replay(spark, ReplayConfig(warehouse=warehouse, num_buckets=8, max_epochs=3), src)
+    target, dlq, manifest = open_tables(spark, cfg)
+    target.rename_column(old, new)
+    versions = [t.current_version() for t in (target, dlq, manifest)]
+
+    with pytest.raises(ValueError, match="renamed columns"):
+        replay(spark, cfg, src)
+    with pytest.raises(ValueError, match="renamed columns"):
+        apply_epoch(spark, cfg, target, dlq, manifest, src.epoch(3), 3, next_run_id(manifest))
+    assert [t.current_version() for t in (target, dlq, manifest)] == versions
 
 
 def _mk_events(spark, rows, seq_type="long", extra_cols=""):

@@ -36,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-epochs", type=int, default=None, help="stop after N epochs (resume later)")
     p.add_argument("--rebucket-above-rows", type=int, default=None,
                    help="auto bucket-spec evolution: rebucket the target to 4x when a bucket passes this row count")
-    p.add_argument("--dedup-strategy", choices=["auto", "broadcast", "shuffle", "defer", "fused"], default=None)
+    p.add_argument("--dedup-strategy", choices=["auto", "shuffle", "fused"], default=None)
     p.add_argument("--keep-tombstones", action="store_const", const=True, default=None)
     p.add_argument("--master", default=None, help="override master (default: env/spark-submit)")
     p.add_argument("--log-level", default=None)

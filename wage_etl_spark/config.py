@@ -31,7 +31,6 @@ class EngineConfig:
     max_epochs: int | None = None
     dedup_strategy: str = "auto"
     keep_tombstones: bool = False
-    broadcast_key_limit: int = 1_000_000
     rebucket_above_rows: int | None = None
     master: str | None = None
     log_level: str = "INFO"
@@ -49,7 +48,6 @@ class EngineConfig:
             max_epochs=self.max_epochs,
             dedup_strategy=self.dedup_strategy,
             keep_tombstones=self.keep_tombstones,
-            broadcast_key_limit=self.broadcast_key_limit,
             rebucket_above_rows=self.rebucket_above_rows,
         )
 

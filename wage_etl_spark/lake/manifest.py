@@ -84,8 +84,9 @@ def commit_epoch(
     cluster job.
 
     Two row counts are recorded (the reference's wages_loaded tracks only
-    epoch-sourced rows): ``rows_loaded`` = rows the epoch itself contributed
-    (staged winners), ``rows_merged`` = total rows in every rewritten bucket
+    epoch-sourced rows): ``rows_loaded`` = the epoch's valid
+    (non-quarantined) events, every one of which entered the LWW
+    resolution, ``rows_merged`` = total rows in every rewritten bucket
     (carried-over rows included — the copy-on-write write amplification)."""
     rows = [
         dict(

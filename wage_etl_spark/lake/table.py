@@ -259,9 +259,16 @@ class LakeTable:
 
     # ------------------------------------------------------------------ read
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def read(self, version: int | None = None, buckets: set[int] | None = None) -> DataFrame:
+        """The table at ``version`` (default: current). ``buckets``: read
+        only those bucket ids' files (file-level pruning); None reads all."""
         snap = self.snapshot(version)
-        files = [os.path.join(self.root, f) for f in snap.all_files()]
+        files = [
+            os.path.join(self.root, f)
+            for b, fs in snap.files.items()
+            if buckets is None or int(b) in buckets
+            for f in fs
+        ]
         if not files:
             return self.spark.createDataFrame([], snap.schema)
         df = self.spark.read.schema(self._physical_schema(snap)).parquet(*files)
@@ -550,14 +557,18 @@ class LakeTable:
         files_by_bucket: dict[str, list[str]],
         schema: StructType | None = None,
         properties: dict[str, str] | None = None,
+        touched: set[int] | None = None,
     ) -> Snapshot:
-        """Replace the ENTIRE table state with already-written bucket-pure
-        parquet files by moving them in (zero rewrite — the dense-epoch
-        fused-apply sink). ``files_by_bucket`` maps bucket id -> absolute
-        paths of that bucket's files; buckets absent from the map become
-        empty. Files may carry a superset of ``schema`` (reads project the
-        table schema). Old files stay on disk (copy-on-write), so rollback
-        and time travel keep working."""
+        """Replace table state with already-written bucket-pure parquet
+        files by moving them in (zero rewrite — the fused-apply sink).
+        ``files_by_bucket`` maps bucket id -> absolute paths of that bucket's
+        files. ``touched=None`` replaces the ENTIRE table: buckets absent
+        from the map become empty. Otherwise only the ``touched`` buckets are
+        replaced (a touched bucket absent from the map becomes empty) and
+        every other bucket's file list carries over unchanged. Files may
+        carry a superset of ``schema`` (reads project the table schema). Old
+        files stay on disk (copy-on-write), so rollback and time travel keep
+        working."""
         snap = self.snapshot()
         if snap.renames:
             raise ValueError(
@@ -565,7 +576,10 @@ class LakeTable:
                 "(files carry current names; physical schema expects originals)"
             )
         commit_dir = uuid.uuid4().hex
-        new_files: dict[str, list[str]] = {}
+        new_files: dict[str, list[str]] = {
+            b: list(fs) for b, fs in snap.files.items()
+            if touched is not None and int(b) not in touched
+        }
         for b, paths in files_by_bucket.items():
             rel_dir = os.path.join("data", commit_dir, f"_b={int(b)}")
             os.makedirs(os.path.join(self.root, rel_dir), exist_ok=True)

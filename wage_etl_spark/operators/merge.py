@@ -27,7 +27,7 @@ Physical plan (why it scales):
 MERGE's duplicate-source-key hazard (Iceberg raises on ambiguous matches) is
 structurally impossible here: the bucket-local sort collapses duplicate
 source keys to their LWW winner (callers typically pass ``dedup_lww`` output
-anyway; the ``defer`` replay strategy deliberately does not).
+anyway).
 """
 
 from __future__ import annotations
@@ -119,25 +119,13 @@ def _merge_apply_inner(table, winners, ordering_cols, op_col, properties, snap, 
 
     # 3. pruned target read: only files of touched buckets
     touched_set = {str(b) for b in touched}
-    tfiles = [
-        os.path.join(table.root, f)
-        for b, fs in snap.files.items()
-        if b in touched_set
-        for f in fs
-    ]
-    if tfiles:
-        target = table.spark.read.schema(table._physical_schema(snap)).parquet(*tfiles)
-        for old, new in snap.renames.items():
-            if old in target.columns:
-                target = target.withColumnRenamed(old, new)
-        # files are bucket-pure but may contain keys of other buckets only if
-        # bucket spec changed; keep a cheap belt-and-braces filter that
-        # Catalyst folds into the scan
-        target = target.withColumn("_b", bucket_expr(key_cols, snap.num_buckets)).filter(
-            F.col("_b").isin(*touched)
-        ).drop("_b")
-    else:
-        target = table.spark.createDataFrame([], snap.schema)
+    # files are bucket-pure but may contain keys of other buckets only if
+    # bucket spec changed; keep a cheap belt-and-braces filter that Catalyst
+    # folds into the scan
+    target = table.read(buckets=set(touched))
+    target = target.withColumn("_b", bucket_expr(key_cols, snap.num_buckets)).filter(
+        F.col("_b").isin(*touched)
+    ).drop("_b")
 
     # 4. align both sides to the evolved schema + merge metadata columns
     def align(df: DataFrame, is_source: int, op_expr) -> DataFrame:

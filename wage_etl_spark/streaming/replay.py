@@ -35,7 +35,6 @@ from wage_etl_spark.lake.manifest import (
 from wage_etl_spark.lake.table import LakeTable, bucket_expr
 from wage_etl_spark.operators.dedup_lww import dedup_lww
 from wage_etl_spark.operators.merge import merge_apply
-from wage_etl_spark.operators.validate import validate_events
 
 log = logging.getLogger("wage_etl_spark.replay")
 
@@ -72,33 +71,25 @@ DLQ_SCHEMA = StructType(
 class ReplayConfig:
     warehouse: str
     num_buckets: int = 32
-    salt_buckets: int = 0  # >0 enables two-phase salted LWW for hot keys
+    salt_buckets: int = 0  # >0 enables two-phase salted LWW for hot keys (shuffle)
     max_epochs: int | None = None
-    # winner-version sets up to this many keys are broadcast (slim-shuffle
-    # dedup, no full-width shuffle); bigger epochs fall back to argmax
-    broadcast_key_limit: int = 1_000_000
     # keep delete tombstones in the target (required when epochs/micro-
     # batches may arrive out of version order — a late lower-version event
     # must not resurrect a deleted key); readers filter is_deleted
     keep_tombstones: bool = False
-    # "auto": count winner versions, broadcast if under the limit.
-    # "broadcast": skip the decision count entirely — the version aggregate
-    #   becomes a broadcast subquery inside the routing job (use when the
-    #   per-epoch key cardinality is known to be small).
-    # "shuffle": always use the argmax shuffle (the 10^10-key default).
-    # "defer": do NOT dedup in the route job at all — stage every valid
-    #   event and let MERGE's single-shuffle bucket-local sort resolve LWW
-    #   (it dedups per key anyway). The route job becomes a pure
-    #   scan+validate+write with zero shuffles, so each event moves through
-    #   exactly ONE shuffle per epoch (the merge's). Best for low-duplicate
-    #   streams; duplicate-heavy/hot-key epochs should prefer the argmax
-    #   strategies, which collapse duplicates map-side before shuffling.
-    # "fused": DENSE-epoch mode — ONE Spark job per epoch: current target
-    #   state ∪ tagged events, one bucket repartition, bucket-local sorted
-    #   LWW, one write partitioned by (route, bucket); DLQ adopts its files
-    #   and the target adopts the stage files as a full copy-on-write state
-    #   replacement. Halves the per-epoch fixed cost; every epoch rewrites
-    #   the whole table, so use when epochs touch most buckets anyway.
+    # how an epoch resolves LWW and reaches the target (apply_epoch):
+    # "auto": the single-shuffle fused LWW plan pruned to the buckets the
+    #   epoch touches — one slim per-bucket count of the events, then ONE
+    #   write job over events ∪ the touched buckets' target rows; every
+    #   untouched bucket's files carry over. The default, for sparse and
+    #   live-tail epochs.
+    # "fused": the same plan unpruned — no count job, every epoch rewrites
+    #   the whole table. For dense epochs that touch every bucket anyway;
+    #   the only strategy that coalesces catch-up epochs (catch_up_epochs).
+    # "shuffle": map-side-combining argmax shuffle (dedup_lww, optionally
+    #   salted) routes winners to a staged write, then merge_apply splices
+    #   them into the touched buckets. Collapses duplicates before the
+    #   shuffle, for hot-key skew at scale.
     dedup_strategy: str = "auto"
     # auto bucket-spec evolution: after an epoch commits, if the largest
     # rewritten bucket exceeds this row count, the target is rebucketed to
@@ -134,6 +125,12 @@ class ReplayConfig:
     catch_up_epochs: int = 1
     extra: dict = field(default_factory=dict)
 
+    def __post_init__(self):
+        if self.dedup_strategy not in ("auto", "fused", "shuffle"):
+            raise ValueError(
+                f"unknown dedup_strategy {self.dedup_strategy!r} (auto, fused or shuffle)"
+            )
+
 
 def open_tables(spark: SparkSession, cfg: ReplayConfig) -> tuple[LakeTable, LakeTable, LakeTable]:
     target = LakeTable(spark, os.path.join(cfg.warehouse, "repo_code"))
@@ -164,6 +161,17 @@ def _rollback_orphans(table: LakeTable, last_epoch: int) -> None:
         table.rollback_to(good, properties={"epoch": str(last_epoch)})
 
 
+def _check_no_renames(target: LakeTable) -> None:
+    """Epochs carry the original column names; a renamed target would fail
+    mid-epoch, after the DLQ had committed. Refuse before writing anything."""
+    renames = target.snapshot().renames
+    if renames:
+        raise ValueError(
+            f"cannot apply epochs to {target.root}: it has renamed columns "
+            f"{renames} and change events carry the original names"
+        )
+
+
 def apply_epoch(
     spark: SparkSession,
     cfg: ReplayConfig,
@@ -178,38 +186,37 @@ def apply_epoch(
     """Validate -> route (DLQ | LWW winners) -> MERGE -> manifest, one epoch.
 
     ``events_in``: caller-known row count of ``events`` (e.g. from the epoch
-    source's parquet footers). Only the fused path needs it — the routed
-    path counts via a free Observation on its own scan.
+    source's parquet footers); otherwise it is counted.
 
-    Physical strategy (scale rationale):
+    Physical strategy (``cfg.dedup_strategy``):
 
-    1. A slim pre-pass aggregates ONLY ``(repo, path) -> max(commit,
-       event_seq)`` over valid rows — the shuffle carries ~100 B/row instead
-       of the full event (content is ~KB/row), so the only all-data shuffle
-       of the naive plan disappears.
-    2. If the winner-version set fits a broadcast
-       (``cfg.broadcast_key_limit``), the routing pass is ONE full scan with
-       a broadcast hash join and ZERO full-width shuffle: every row is either
-       quarantined (-> DLQ route), the winner of its key (-> stage route), or
-       dropped. Epochs touching more keys than the limit fall back to the
-       argmax shuffle (``dedup_lww``), which is the 10^10-scale default.
-    3. One parquet write, partitioned by route. The DLQ *adopts* its files
-       (zero rewrite); the MERGE consumes the staged winners (tiny).
-       Duplicate identical winners (idempotency fixture) are collapsed by the
-       merge's own argmax, so no extra dedup pass is needed.
+    - ``auto`` and ``fused`` run ``_apply_epoch_fused``: target rows and the
+      epoch's tagged events are unioned, repartitioned ONCE on the bucket id
+      and resolved by a bucket-local sort; one write partitioned by (route,
+      bucket) feeds both tables by file adoption. ``auto`` first counts the
+      events per bucket (one slim aggregate job), reads only the touched
+      buckets' target files and carries every other bucket over — a sparse
+      epoch rewrites only what it touches. ``fused`` rewrites the whole
+      table and skips the count.
+    - ``shuffle``: the argmax shuffle (``dedup_lww``) picks the winners;
+      quarantined rows ride through under a unique synthetic key. One
+      write, partitioned by route: the DLQ *adopts* its files and
+      ``merge_apply`` consumes the staged winners, pruned to the touched
+      buckets an ``Observation`` on the write collected.
 
-    Counters come from an ``Observation`` on the scan and from parquet
-    footers — counting never re-scans, and nothing is ever read back from
-    the DLQ (which grows with every epoch)."""
-    if cfg.dedup_strategy == "fused":
+    Counters come from the scan (an ``Observation`` or the bucket count)
+    and from parquet footers — counting never re-scans, and nothing is ever
+    read back from the DLQ (which grows with every epoch)."""
+    _check_no_renames(target)
+    if cfg.dedup_strategy in ("auto", "fused"):
         return _apply_epoch_fused(
-            spark, cfg, target, dlq, manifest, events, epoch, run_id, events_in
+            spark, cfg, target, dlq, manifest, events, epoch, run_id, events_in,
+            prune=cfg.dedup_strategy == "auto",
         )
     import shutil
     import uuid as _uuid
 
     from pyspark.sql import Observation
-    from pyspark.sql.functions import broadcast
 
     from wage_etl_spark.operators.validate import REASON_MAX_LEN, tag_events
 
@@ -233,63 +240,17 @@ def apply_epoch(
         F.count(F.lit(1)).alias("events_in"),
         F.sum(is_bad.cast("long")).alias("n_q"),
     )
-
-    # --- slim winner-version pre-pass (no content in the shuffle) ---------
-    versions = (
-        tagged.filter(~is_bad)
-        .select(*KEY_COLS, F.struct(*[F.col(c) for c in ORDERING_COLS]).alias("_v"))
-        .groupBy(*KEY_COLS)
-        .agg(F.max("_v").alias("_v"))
-        .select(
-            *[F.col(k).alias(f"_k_{k}") for k in KEY_COLS],
-            *[F.col(f"_v.{c}").alias(f"_w_{c}") for c in ORDERING_COLS],
-        )
-    )
-    if cfg.dedup_strategy == "broadcast":
-        use_broadcast = True
-    elif cfg.dedup_strategy in ("shuffle", "defer"):
-        use_broadcast = False
-    else:  # auto: pay one slim counting pass to pick the physical strategy
-        versions = versions.persist()
-        use_broadcast = versions.count() <= cfg.broadcast_key_limit
-
     raw_json = F.to_json(
         F.struct(*[F.col(c) for c in events.columns]), {"ignoreNullFields": "false"}
     )
-    if use_broadcast:
-        # winner iff its (commit, event_seq) equals the key's max version
-        join_cond = None
-        for k in KEY_COLS:
-            c = F.col(k) == F.col(f"_k_{k}")
-            join_cond = c if join_cond is None else (join_cond & c)
-        for oc in ORDERING_COLS:
-            join_cond = join_cond & (F.col(oc) == F.col(f"_w_{oc}"))
-        joined = tagged.join(broadcast(versions), on=join_cond, how="left")
-        is_winner = ~is_bad & F.col(f"_k_{KEY_COLS[0]}").isNotNull()
-        routed_src = joined.withColumn(
-            "_route",
-            F.when(is_bad, F.lit("dlq")).when(is_winner, F.lit("stage")),
-        ).filter(F.col("_route").isNotNull())
-    elif cfg.dedup_strategy == "defer":
-        # no route-side dedup: stage every valid event; MERGE's bucket-local
-        # sort resolves LWW per key. Route job = scan+validate+write, ZERO
-        # shuffles — each event crosses exactly one shuffle (the merge's).
-        routed_src = tagged.withColumn(
-            "_route", F.when(is_bad, F.lit("dlq")).otherwise(F.lit("stage"))
-        )
-    else:
-        # 10^10-scale fallback: full argmax shuffle; quarantined rows ride
-        # through under a unique synthetic key
-        keyed = tagged.withColumn(
-            "_qid", F.when(is_bad, F.monotonically_increasing_id())
-        )
-        winners = dedup_lww(
-            keyed, [*KEY_COLS, "_qid"], ORDERING_COLS, salt_buckets=cfg.salt_buckets
-        )
-        routed_src = winners.withColumn(
-            "_route",
-            F.when(F.size("_violations") > 0, F.lit("dlq")).otherwise(F.lit("stage")),
-        )
+    keyed = tagged.withColumn("_qid", F.when(is_bad, F.monotonically_increasing_id()))
+    winners = dedup_lww(
+        keyed, [*KEY_COLS, "_qid"], ORDERING_COLS, salt_buckets=cfg.salt_buckets
+    )
+    routed_src = winners.withColumn(
+        "_route",
+        F.when(F.size("_violations") > 0, F.lit("dlq")).otherwise(F.lit("stage")),
+    )
 
     payload_cols = [c for c in events.columns if c != "epoch"]
     routed = routed_src.select(
@@ -321,8 +282,6 @@ def apply_epoch(
         _mark("plan")
         routed.write.mode("overwrite").partitionBy("_route").parquet(epoch_tmp)
         _mark("route_write")
-        if cfg.dedup_strategy == "auto":
-            versions.unpersist()
         events_in = int(obs.get["events_in"])
         n_quarantined = int(obs.get["n_q"] or 0)
         n_valid = events_in - n_quarantined
@@ -346,17 +305,8 @@ def apply_epoch(
         merge_cols = [*payload_cols, "content_sha256", "epoch", "run_id", "load_timestamp"]
         touched = sorted(int(b) for b in (obs_buckets.get["touched"] or []))
         if touched:
-            import pyarrow.parquet as _pq
-
-            # epoch-sourced row count from footers (no extra Spark job)
-            rows_loaded = sum(
-                _pq.ParquetFile(os.path.join(stage_dir, f)).metadata.num_rows
-                for f in os.listdir(stage_dir)
-                if f.endswith(".parquet")
-            )
             staged = spark_.read.parquet(stage_dir).select(*merge_cols)
         else:
-            rows_loaded = 0
             staged = spark_.createDataFrame([], tagged.select(*payload_cols).schema).selectExpr(
                 "*", "cast(null as string) content_sha256",
                 "cast(null as long) epoch", "cast(null as long) run_id",
@@ -377,7 +327,7 @@ def apply_epoch(
     commit_epoch(
         manifest,
         epoch=epoch, run_id=run_id, status=status, events_in=events_in,
-        rows_merged=rows_written, rows_loaded=rows_loaded, rows_quarantined=n_quarantined,
+        rows_merged=rows_written, rows_loaded=n_valid, rows_quarantined=n_quarantined,
         snapshot_id=snap.version, start_ts=start_ts, end_ts=end_ts,
         partition_counts={int(b): c for b, c in bucket_counts.items()},
     )
@@ -529,13 +479,19 @@ def _fused_plan_pieces(
         if f.name not in key_cols and f.name not in ordering_ext
     ]
     P["bucket_col"] = bucket_expr(key_cols, snap.num_buckets)
-    combo = F.col("_b")
     if mult > 1:
         P["salt_col"] = F.pmod(
             F.xxhash64(*[F.col(c) for c in key_cols], F.lit(0x5417)), F.lit(mult)
         ).cast("int")
-        combo = F.col("_b") * mult + F.col("_salt")
-    P["pt_col"] = exact_partition_column(combo, snap.num_buckets * mult)
+
+    def pt_of(slot, n_slots: int):
+        """Reducer token of a row whose bucket has reducer slot ``slot`` in
+        [0, n_slots), sub-split ``mult`` ways by the salt."""
+        combo = slot * mult + F.col("_salt") if mult > 1 else slot
+        return exact_partition_column(combo, n_slots * mult)
+
+    P["pt_of"] = pt_of
+    P["pt_col"] = pt_of(F.col("_b"), snap.num_buckets)
     w = Window.partitionBy("_pt").orderBy(
         *[F.col(c).asc() for c in key_cols],
         F.col("_qid").asc(),
@@ -567,24 +523,24 @@ def _apply_epoch_fused(
     events_in: int | None = None,
     chunk: list[int] | None = None,
     events_in_by_epoch: dict[int, int] | None = None,
+    prune: bool = False,
 ) -> dict:
-    """DENSE-epoch apply: ONE Spark job per epoch.
+    """The single-shuffle LWW apply: ONE write job per epoch.
 
-    When an epoch touches most buckets anyway (high key cardinality vs
-    bucket count — true for frequent small commit epochs over a hot
-    keyspace), bucket pruning buys nothing and the two-job shape (route
-    write + merge) pays its fixed cost twice. This mode unions the CURRENT
-    target state with the epoch's tagged events, repartitions ONCE on the
-    bucket id, resolves LWW winners with the same bucket-local sort the
-    merge uses, and writes a single output partitioned by (route, bucket):
-    the DLQ adopts its files, the target adopts the stage files as a full
-    copy-on-write state replacement (``overwrite_with_files``). Identical
+    Unions the target state with the epoch's tagged events, repartitions
+    ONCE on the bucket id, resolves LWW winners with the same bucket-local
+    sort the merge uses, and writes a single output partitioned by (route,
+    bucket): the DLQ adopts its files, the target adopts the stage files as
+    a copy-on-write state replacement (``overwrite_with_files``). Identical
     snapshot/manifest exactly-once protocol — old files stay on disk, so
     rollback and resume are unchanged.
 
-    Trade-off vs the default two-job shape: every epoch rewrites the whole
-    table, so this is for dense epochs (bench multi-epoch profile, small
-    hot tables); sparse epochs over huge tables want the pruned merge.
+    ``prune=True`` (the ``auto`` strategy): one slim aggregate counts the
+    events per bucket first. Its keys are the touched set — only those
+    buckets' target files are read and rewritten, every other bucket's
+    files carry over — and its sum is ``events_in`` when the caller does
+    not know it. ``prune=False`` (``fused``) rewrites the whole table and
+    skips the count: for dense epochs that touch every bucket anyway.
 
     Catch-up chunks: with ``chunk=[a..b]`` the SAME plan applies all of the
     range's events at once (``events`` = the range scan, rows keeping their
@@ -609,8 +565,6 @@ def _apply_epoch_fused(
         _t0 = _time.monotonic()
 
     snap = target.snapshot()
-    if snap.renames:
-        raise ValueError("fused apply does not support renamed columns")
 
     # shuffle width: sub-split each bucket into key-pure salt partitions so
     # the single fused stage runs num_buckets*mult tasks instead of being
@@ -647,8 +601,9 @@ def _apply_epoch_fused(
     # action never fires), and fused runs under the streaming front-end
     # too. events_in comes from the caller when the epoch source knows it
     # from parquet footers (EpochSource.epoch_rows — zero jobs), else from
-    # a metadata-only count (row-group footers, no data read); quarantined
-    # comes from the DLQ output files' footers.
+    # the per-bucket count when pruning, else from a metadata-only count
+    # (row-group footers, no data read); quarantined comes from the DLQ
+    # output files' footers.
     if chunk is not None and events_in_by_epoch is None:
         # one slim agg job (epoch column only) when the source can't provide
         # footer counts for the range
@@ -658,15 +613,20 @@ def _apply_epoch_fused(
         }
         for e in chunk:
             events_in_by_epoch.setdefault(e, 0)
+    # events side (both routes) aligned to the evolved schema column order;
+    # target side: current state re-enters the LWW resolution as is_source=0
+    ev_side = tagged.select(*P["ev_cols"](epoch, run_id)).select(*P["ev_align_cols"])
+    touched = None
+    if prune:
+        per_bucket = ev_side.groupBy(P["bucket_col"]).count().collect()
+        touched = {int(b) for b, _ in per_bucket}
+        if events_in is None:
+            events_in = sum(int(n) for _, n in per_bucket)
     if events_in is None:
         events_in = (
             sum(events_in_by_epoch.values()) if chunk is not None else events.count()
         )
-
-    # events side (both routes) aligned to the evolved schema column order;
-    # target side: current state re-enters the LWW resolution as is_source=0
-    ev_side = tagged.select(*P["ev_cols"](epoch, run_id)).select(*P["ev_align_cols"])
-    t_side = target.read().select(*P["t_cols"])
+    t_side = target.read(buckets=touched).select(*P["t_cols"])
     unioned = t_side.unionByName(ev_side)
 
     # THE shuffle: one collision-free bucket repartition (combo i -> reducer
@@ -678,9 +638,15 @@ def _apply_epoch_fused(
     bucketed = unioned.withColumn("_b", P["bucket_col"])
     if mult > 1:
         bucketed = bucketed.withColumn("_salt", P["salt_col"])
-    bucketed = bucketed.withColumn("_pt", P["pt_col"]).repartition(
-        snap.num_buckets * mult, "_pt"
-    )
+    n_slots, pt_col = snap.num_buckets, P["pt_col"]
+    if touched:
+        # reducers for the touched buckets only (slot = rank in the touched
+        # set): an untouched bucket's reducer would just run an empty task
+        ranks = sorted(touched)
+        n_slots = len(ranks)
+        slot = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b")).cast("int") - 1
+        pt_col = P["pt_of"](slot, n_slots)
+    bucketed = bucketed.withColumn("_pt", pt_col).repartition(n_slots * mult, "_pt")
     merged = (
         bucketed.withColumn("_keep", P["keep_col"])
         .filter(F.col("_keep"))
@@ -695,7 +661,8 @@ def _apply_epoch_fused(
     epoch_tmp = os.path.join(cfg.warehouse, "_epoch_tmp", _uuid.uuid4().hex)
     try:
         _mark("plan")
-        result.write.mode("overwrite").partitionBy("_route", "_b").parquet(epoch_tmp)
+        if touched != set():  # an empty pruned epoch has nothing to write
+            result.write.mode("overwrite").partitionBy("_route", "_b").parquet(epoch_tmp)
         _mark("fused_write")
 
         def _bucket_files(route: str) -> dict[str, list[str]]:
@@ -744,9 +711,13 @@ def _apply_epoch_fused(
 
         stage_by_bucket = _bucket_files("stage")
         new_snap = target.overwrite_with_files(
-            stage_by_bucket, schema=schema, properties={"epoch": str(epoch)}
+            stage_by_bucket, schema=schema, properties={"epoch": str(epoch)},
+            touched=touched,
         )
-        bucket_counts = target.file_row_counts(new_snap.files)
+        # rows per rewritten bucket (every bucket when unpruned)
+        bucket_counts = target.file_row_counts(
+            {b: fs for b, fs in new_snap.files.items() if touched is None or int(b) in touched}
+        )
         rows_written = sum(bucket_counts.values())
         _mark("adopt")
     finally:
@@ -804,6 +775,7 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
     epoch. ``source`` is a sources.events.EpochSource (or anything with
     ``max_epoch()`` and ``epoch(e)``)."""
     target, dlq, manifest = open_tables(spark, cfg)
+    _check_no_renames(target)
     last = last_committed_epoch(manifest)
     _rollback_orphans(target, last)
     _rollback_orphans(dlq, last)

@@ -130,11 +130,11 @@ def run_cdc_replay(
 
     src = EpochSource.from_parquet(spark, events_path)
     n_events = src._df.count()
-    # the bench stream caps content at 256 B, so the full-width argmax
-    # shuffle carries barely more than a slim version pre-pass — measured
-    # ~1.8x faster end-to-end than a broadcast slim-version route AND
-    # near-linear 1->4 scaling. Other strategies stay selectable
-    # (ReplayConfig.dedup_strategy).
+    # "shuffle": the engine's pruned single-shuffle apply behind an argmax
+    # pre-collapse — at the bench stream's 256 B content cap the
+    # hash-aggregate shrinks duplicate keys map-side for little extra
+    # shuffle. Kept as the default so the leg's keys stay comparable across
+    # rounds; other shapes stay selectable (ReplayConfig.dedup_strategy).
     cfg = ReplayConfig(
         warehouse=warehouse,
         num_buckets=num_buckets,
@@ -765,9 +765,10 @@ argmax (immunity), and salting does not regress it. The structural argument
 is what matters at 100x: argmax's map-side combine bounds the hot key's
 post-shuffle volume at n_map_tasks rows (independent of the hot share),
 while the window plan must sort ALL of the hot key's rows in one partition
-— its hot task grows linearly with the skew. The replay hot path shuffles
-even less: a slim (key -> max version) pre-pass (~100 B/row) instead of
-full events. salt_buckets stays available for sort-fallback edge cases.
+— its hot task grows linearly with the skew. The replay's `shuffle`
+strategy puts this argmax in front of its bucket-local sort, so a hot key
+reaches the sort already collapsed. Salting is an operator option
+(`dedup_lww(salt_buckets=...)`), not a replay setting.
 """
     md += _sf1_section()
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:

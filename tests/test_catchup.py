@@ -1,9 +1,9 @@
 """Catch-up coalescing (ReplayConfig.catch_up_epochs): a chunk of pending
-epochs applied in ONE fused job must be byte-identical to the per-epoch
+epochs applied in ONE apply must be byte-identical to the per-epoch
 replay — final state, DLQ contents, and per-epoch manifest metrics — and the
 chunk's manifest append must stay the atomic commit point for resume.
 
-Equivalence argument under test: the fused apply is monotone max-version LWW
+Equivalence argument under test: the apply is monotone max-version LWW
 (state re-enters as is_source=0 and the bucket-local sort picks the global
 per-key argmax), so iterating it over epochs a..b and running it once over
 the union of a..b's events yield the same winners."""
@@ -14,6 +14,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from wage_etl_spark.lake.manifest import last_committed_epoch
@@ -39,7 +40,8 @@ def _replay_parquet(spark, tmp_path, name, ev):
     return EpochSource.from_parquet(spark, path)
 
 
-def test_chunk_equals_per_epoch_replay(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["fused", "auto"])
+def test_chunk_equals_per_epoch_replay(spark, tmp_path, strategy):
     ev = synthesize_events(
         spark, n_events=3000, n_keys=80, n_epochs=4, invalid_frac=0.05
     )
@@ -47,11 +49,11 @@ def test_chunk_equals_per_epoch_replay(spark, tmp_path):
     src = _replay_parquet(spark, tmp_path, "ev", ev)
 
     cfg_a = ReplayConfig(
-        warehouse=str(tmp_path / "whA"), num_buckets=8, dedup_strategy="fused"
+        warehouse=str(tmp_path / "whA"), num_buckets=8, dedup_strategy=strategy
     )
     res_a = replay(spark, cfg_a, src)
     cfg_b = ReplayConfig(
-        warehouse=str(tmp_path / "whB"), num_buckets=8, dedup_strategy="fused",
+        warehouse=str(tmp_path / "whB"), num_buckets=8, dedup_strategy=strategy,
         catch_up_epochs=4,
     )
     res_b = replay(spark, cfg_b, src)

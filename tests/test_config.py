@@ -16,15 +16,15 @@ def test_defaults():
 
 def test_file_then_env_then_cli(tmp_path):
     f = tmp_path / "cfg.yaml"
-    f.write_text("num_buckets: 64\nsalt_buckets: 4\ndedup_strategy: fused\n")
-    env = {"WAGE_ETL_SALT_BUCKETS": "8", "WAGE_ETL_KEEP_TOMBSTONES": "true"}
+    f.write_text("num_buckets: 64\nmax_epochs: 4\ndedup_strategy: fused\n")
+    env = {"WAGE_ETL_MAX_EPOCHS": "8", "WAGE_ETL_KEEP_TOMBSTONES": "true"}
     cfg = load_config(
-        cli_overrides={"salt_buckets": None, "dedup_strategy": "auto"},
+        cli_overrides={"max_epochs": None, "dedup_strategy": "auto"},
         config_file=str(f),
         env=env,
     )
     assert cfg.num_buckets == 64           # file layer
-    assert cfg.salt_buckets == 8           # env overrides file; None CLI ignored
+    assert cfg.max_epochs == 8             # env overrides file; None CLI ignored
     assert cfg.dedup_strategy == "auto"  # CLI overrides env/file
     assert cfg.keep_tombstones is True     # env bool coercion
 

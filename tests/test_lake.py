@@ -140,6 +140,7 @@ def test_rename_key_column_keeps_merging(spark, warehouse):
     """ADVICE fix: renaming a KEY column must update key_cols so subsequent
     merges resolve the (new) logical name; bucket assignment is unchanged
     because the physical column feeding xxhash64 is the same."""
+    from wage_etl_spark.lake.table import bucket_expr
     from wage_etl_spark.operators.merge import merge_apply
 
     t = make(spark, warehouse)
@@ -158,6 +159,11 @@ def test_rename_key_column_keeps_merging(spark, warehouse):
     # bucket purity preserved: carried-over buckets were not rewritten
     snap = t.snapshot()
     untouched = [b for b in old_files if old_files[b] == snap.files.get(b)]
+    winner_buckets = {
+        r["_b"] for r in winners.select(bucket_expr(snap.key_cols, snap.num_buckets).alias("_b")).collect()
+    }
+    assert set(untouched) >= {b for b in old_files if int(b) not in winner_buckets}
+    assert all(int(b) in winner_buckets for b in set(snap.files) - set(old_files))
     assert t.read().count() == 3 and snap.key_cols == ["repo", "file_path"]
 
 

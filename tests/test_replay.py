@@ -96,8 +96,8 @@ def test_seed_matrix_oracle_equality(spark, warehouse, seed):
 
 
 def test_shuffle_fallback_dedup_matches_oracle(spark, warehouse):
-    """dedup_strategy='shuffle' runs the argmax-shuffle route + merge_apply
-    path; result must be identical to the oracle."""
+    """dedup_strategy='shuffle' runs the pruned plan behind an argmax
+    pre-collapse; result must be identical to the oracle."""
     ev = synthesize_events(spark, n_events=3000, n_keys=150, n_epochs=2, invalid_frac=0.05)
     cfg = ReplayConfig(warehouse=warehouse, num_buckets=8, dedup_strategy="shuffle")
     replay(spark, cfg, EpochSource(ev))
@@ -214,11 +214,11 @@ import pytest
 
 @pytest.mark.parametrize("strategy", ["shuffle", "fused"])
 def test_alternate_strategies_match_oracle(spark, warehouse, strategy):
-    """dedup_strategy='shuffle' (argmax shuffle routes the winners, MERGE
-    splices them into the touched buckets) and 'fused' (ONE write job per
-    epoch: whole target state unioned with events, single bucket
-    repartition, file adoption for both DLQ and target) must both equal the
-    per-epoch oracle, including the duplicate-event fixture rows."""
+    """dedup_strategy='shuffle' (the pruned plan behind an argmax
+    pre-collapse) and 'fused' (the plan unpruned: whole target state unioned
+    with events, single bucket repartition, file adoption for both DLQ and
+    target) must both equal the per-epoch oracle, including the
+    duplicate-event fixture rows."""
     ev = synthesize_events(spark, n_events=4000, n_keys=250, n_epochs=3, invalid_frac=0.05)
     cfg = ReplayConfig(warehouse=f"{warehouse}/{strategy}", num_buckets=8, dedup_strategy=strategy)
     replay(spark, cfg, EpochSource(ev))
@@ -406,3 +406,51 @@ def test_empty_auto_epoch_keeps_file_map(spark, warehouse):
     assert target.current_version() == v0 + 1
     assert target.snapshot().files == before.files
     assert last_committed_epoch(manifest) == 1
+
+
+def test_sparse_shuffle_epoch_precollapses_in_pruned_plan(spark, warehouse, monkeypatch):
+    """``shuffle`` is the pruned single-shuffle plan plus an argmax pre-
+    collapse: a sparse tail that sends most of its events to one hot key
+    never calls merge_apply, every
+    untouched bucket keeps its exact file list, and the state and DLQ equal
+    the oracle's."""
+    import importlib
+
+    from wage_etl_spark.lake.table import bucket_expr
+
+    # by module object: the package re-exports a function named ``replay``
+    R = importlib.import_module("wage_etl_spark.streaming.replay")
+
+    def no_merge_apply(*a, **k):
+        raise AssertionError("the shuffle strategy must not call merge_apply")
+
+    monkeypatch.setattr(R, "merge_apply", no_merge_apply)
+    hot = (F.col("epoch") == 1) & (F.col("event_seq") % 3 != 0)
+    ev = (
+        _sparse_stream(spark, tail=24)
+        .withColumn("repo", F.when(hot, F.lit("hot-repo")).otherwise(F.col("repo")))
+        .withColumn("path", F.when(hot, F.lit("hot/key.py")).otherwise(F.col("path")))
+    )
+    assert ev.filter(hot).count() >= 8
+    src = EpochSource(ev)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=32, dedup_strategy="shuffle")
+    replay(spark, ReplayConfig(**{**cfg.__dict__, "max_epochs": 1}), src)
+    target, dlq, manifest = open_tables(spark, cfg)
+    before = target.snapshot()
+
+    res = replay(spark, cfg, src)
+    assert [r["epoch"] for r in res] == [1]
+    epoch_buckets = {
+        r["_b"]
+        for r in ev.filter("epoch = 1").select(bucket_expr(["repo", "path"], 32).alias("_b")).collect()
+    }
+    assert 0 < len(epoch_buckets) < 32
+    after = target.snapshot()
+    for b in set(before.files) | set(after.files):
+        if int(b) not in epoch_buckets:
+            assert after.files.get(b) == before.files.get(b), b
+
+    oracle_state, _, n_quar = replay_oracle([r.asDict() for r in ev.collect()])
+    report = verify_state(spark, target, sha_map(oracle_state))
+    assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
+    assert dlq.read().count() == n_quar

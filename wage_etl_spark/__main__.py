@@ -32,7 +32,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--events", default=None, help="event-log parquet dir (with epoch column)")
     p.add_argument("--warehouse", default=None, help="lake warehouse dir")
     p.add_argument("--num-buckets", type=int, default=None)
-    p.add_argument("--salt-buckets", type=int, default=None)
     p.add_argument("--max-epochs", type=int, default=None, help="stop after N epochs (resume later)")
     p.add_argument("--rebucket-above-rows", type=int, default=None,
                    help="auto bucket-spec evolution: rebucket the target to 4x when a bucket passes this row count")
@@ -49,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
         cli_overrides={
             k: getattr(args, k)
             for k in (
-                "events", "warehouse", "num_buckets", "salt_buckets", "max_epochs",
+                "events", "warehouse", "num_buckets", "max_epochs",
                 "dedup_strategy", "keep_tombstones", "rebucket_above_rows", "master", "log_level", "log_file",
             )
         },

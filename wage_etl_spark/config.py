@@ -27,7 +27,6 @@ class EngineConfig:
     events: str | None = None
     warehouse: str | None = None
     num_buckets: int = 32
-    salt_buckets: int = 0
     max_epochs: int | None = None
     dedup_strategy: str = "auto"
     keep_tombstones: bool = False
@@ -44,7 +43,6 @@ class EngineConfig:
         return ReplayConfig(
             warehouse=self.warehouse,
             num_buckets=self.num_buckets,
-            salt_buckets=self.salt_buckets,
             max_epochs=self.max_epochs,
             dedup_strategy=self.dedup_strategy,
             keep_tombstones=self.keep_tombstones,

@@ -34,7 +34,9 @@ from wage_etl_spark.lake.manifest import (
 )
 from wage_etl_spark.lake.table import LakeTable, bucket_expr
 from wage_etl_spark.operators.dedup_lww import dedup_lww
-from wage_etl_spark.operators.merge import merge_apply
+from wage_etl_spark.operators.merge import align_columns, lww_keep, reentry_op, with_tombstones
+# not called here: perfbench/layers.py:install wraps this module-level name
+from wage_etl_spark.operators.merge import merge_apply  # noqa: F401
 
 log = logging.getLogger("wage_etl_spark.replay")
 
@@ -71,25 +73,24 @@ DLQ_SCHEMA = StructType(
 class ReplayConfig:
     warehouse: str
     num_buckets: int = 32
-    salt_buckets: int = 0  # >0 enables two-phase salted LWW for hot keys (shuffle)
     max_epochs: int | None = None
     # keep delete tombstones in the target (required when epochs/micro-
     # batches may arrive out of version order — a late lower-version event
     # must not resurrect a deleted key); readers filter is_deleted
     keep_tombstones: bool = False
-    # how an epoch resolves LWW and reaches the target (apply_epoch):
-    # "auto": the single-shuffle fused LWW plan pruned to the buckets the
-    #   epoch touches — one slim per-bucket count of the events, then ONE
-    #   write job over events ∪ the touched buckets' target rows; every
-    #   untouched bucket's files carry over. The default, for sparse and
-    #   live-tail epochs.
-    # "fused": the same plan unpruned — no count job, every epoch rewrites
-    #   the whole table. For dense epochs that touch every bucket anyway;
-    #   the only strategy that coalesces catch-up epochs (catch_up_epochs).
-    # "shuffle": map-side-combining argmax shuffle (dedup_lww, optionally
-    #   salted) routes winners to a staged write, then merge_apply splices
-    #   them into the touched buckets. Collapses duplicates before the
-    #   shuffle, for hot-key skew at scale.
+    # every strategy runs the same single-shuffle LWW plan (apply_epoch):
+    # target rows ∪ the epoch's tagged events, one bucket repartition, one
+    # write feeding both the DLQ and the target. The value picks its shape:
+    # "auto": pruned to the buckets the epoch touches — one slim per-bucket
+    #   count of the events, then the write over events ∪ the touched
+    #   buckets' target rows; every untouched bucket's files carry over. The
+    #   default, for sparse and live-tail epochs.
+    # "shuffle": "auto" plus a hash-aggregate (argmax, dedup_lww) pre-
+    #   collapse of the valid events before the sort — duplicates of a hot
+    #   key shrink map-side instead of all reaching one sort. For hot-key
+    #   skew.
+    # "fused": unpruned — no count job, every epoch rewrites the whole
+    #   table. For dense epochs that touch every bucket anyway.
     dedup_strategy: str = "auto"
     # auto bucket-spec evolution: after an epoch commits, if the largest
     # rewritten bucket exceeds this row count, the target is rebucketed to
@@ -102,25 +103,18 @@ class ReplayConfig:
     # between the manifest commit and the rebucket re-triggers it on resume
     # even if later epochs never rewrite the oversized bucket.
     rebucket_above_rows: int | None = None
-    # fused-mode shuffle width: each bucket is sub-split into this many
-    # key-pure salt partitions (salt = hash of the key, so LWW resolution
-    # stays partition-local), widening the single fused stage from
-    # num_buckets tasks to num_buckets*multiplier — a small-bucket-count
-    # table no longer caps the job at num_buckets cores. The write stays
-    # bucket-pure (multiplier files per bucket, adopted verbatim). None =
-    # auto: fill the session's cores (defaultParallelism/num_buckets, <=8).
-    fused_shuffle_multiplier: int | None = None
-    # catch-up coalescing (fused strategy only): when the replay is more
-    # than one epoch behind, apply up to this many consecutive pending
-    # epochs in ONE fused job. Sound because the fused apply is monotone
+    # catch-up coalescing: when the replay is more than one epoch behind,
+    # apply up to this many consecutive pending epochs in ONE apply (the
+    # plan dedup_strategy selects). Sound because the apply is monotone
     # max-version LWW — iterating it over epochs a..b equals one global
-    # argmax over state ∪ all of a..b's events — so the chunk produces the
-    # byte-identical final state; per-epoch events_in/quarantined metrics
-    # are still recorded (source footers + a column-only read of the chunk's
-    # DLQ output). The whole chunk commits atomically (one manifest append),
-    # so the durability/resume granularity while catching up is the chunk,
-    # not the epoch — live tailing (never behind) is unaffected. This is the
-    # scale answer to the fixed ~0.5-1 s/job floor: a 10^4-epoch backlog is
+    # argmax over state ∪ all of a..b's events, and so do the pruning and
+    # the pre-collapse — so the chunk produces the byte-identical final
+    # state; per-epoch events_in/quarantined metrics are still recorded
+    # (source footers + a column-only read of the chunk's DLQ output). The
+    # whole chunk commits atomically (one manifest append), so the
+    # durability/resume granularity while catching up is the chunk, not the
+    # epoch — live tailing (never behind) is unaffected. This is the scale
+    # answer to the fixed ~0.5-1 s/job floor: a 10^4-epoch backlog is
     # 10^4/k jobs, not 10^4.
     catch_up_epochs: int = 1
     extra: dict = field(default_factory=dict)
@@ -172,195 +166,23 @@ def _check_no_renames(target: LakeTable) -> None:
         )
 
 
-def apply_epoch(
-    spark: SparkSession,
-    cfg: ReplayConfig,
-    target: LakeTable,
-    dlq: LakeTable,
-    manifest: LakeTable,
-    events: DataFrame,
-    epoch: int,
-    run_id: int,
-    events_in: int | None = None,
-) -> dict:
-    """Validate -> route (DLQ | LWW winners) -> MERGE -> manifest, one epoch.
-
-    ``events_in``: caller-known row count of ``events`` (e.g. from the epoch
-    source's parquet footers); otherwise it is counted.
-
-    Physical strategy (``cfg.dedup_strategy``):
-
-    - ``auto`` and ``fused`` run ``_apply_epoch_fused``: target rows and the
-      epoch's tagged events are unioned, repartitioned ONCE on the bucket id
-      and resolved by a bucket-local sort; one write partitioned by (route,
-      bucket) feeds both tables by file adoption. ``auto`` first counts the
-      events per bucket (one slim aggregate job), reads only the touched
-      buckets' target files and carries every other bucket over — a sparse
-      epoch rewrites only what it touches. ``fused`` rewrites the whole
-      table and skips the count.
-    - ``shuffle``: the argmax shuffle (``dedup_lww``) picks the winners;
-      quarantined rows ride through under a unique synthetic key. One
-      write, partitioned by route: the DLQ *adopts* its files and
-      ``merge_apply`` consumes the staged winners, pruned to the touched
-      buckets an ``Observation`` on the write collected.
-
-    Counters come from the scan (an ``Observation`` or the bucket count)
-    and from parquet footers — counting never re-scans, and nothing is ever
-    read back from the DLQ (which grows with every epoch)."""
-    _check_no_renames(target)
-    if cfg.dedup_strategy in ("auto", "fused"):
-        return _apply_epoch_fused(
-            spark, cfg, target, dlq, manifest, events, epoch, run_id, events_in,
-            prune=cfg.dedup_strategy == "auto",
-        )
-    import shutil
-    import uuid as _uuid
-
-    from pyspark.sql import Observation
-
-    from wage_etl_spark.operators.validate import REASON_MAX_LEN, tag_events
-
-    import time as _time
-
-    spark_ = events.sparkSession
-    start_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    _t0 = _time.monotonic()
-    _phase = {}
-
-    def _mark(name):
-        nonlocal _t0
-        _phase[name] = round(_time.monotonic() - _t0, 3)
-        _t0 = _time.monotonic()
-
-    tagged = tag_events(events)
-    is_bad = F.size("_violations") > 0
-    obs = Observation()
-    tagged = tagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("events_in"),
-        F.sum(is_bad.cast("long")).alias("n_q"),
-    )
-    raw_json = F.to_json(
-        F.struct(*[F.col(c) for c in events.columns]), {"ignoreNullFields": "false"}
-    )
-    keyed = tagged.withColumn("_qid", F.when(is_bad, F.monotonically_increasing_id()))
-    winners = dedup_lww(
-        keyed, [*KEY_COLS, "_qid"], ORDERING_COLS, salt_buckets=cfg.salt_buckets
-    )
-    routed_src = winners.withColumn(
-        "_route",
-        F.when(F.size("_violations") > 0, F.lit("dlq")).otherwise(F.lit("stage")),
-    )
-
-    payload_cols = [c for c in events.columns if c != "epoch"]
-    routed = routed_src.select(
-        "_route",
-        *[F.col(c) for c in payload_cols],
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
-        F.lit(epoch).cast("long").alias("epoch"),
-        F.lit(run_id).cast("long").alias("run_id"),
-        F.current_timestamp().alias("load_timestamp"),
-        F.when(is_bad, raw_json).alias("raw_data"),
-        F.substring(F.concat_ws(";", "_violations"), 1, REASON_MAX_LEN).alias("rejection_reason"),
-        F.current_timestamp().alias("reject_timestamp"),
-    )
-    # the merge learns the winners' touched-bucket set from an Observation
-    # on this same write job — no per-epoch probe job over the staged files
-    tsnap = target.snapshot()
-    obs_buckets = Observation()
-    routed = routed.observe(
-        obs_buckets,
-        F.collect_set(
-            F.when(
-                F.col("_route") == "stage",
-                bucket_expr(tsnap.key_cols, tsnap.num_buckets),
-            )
-        ).alias("touched"),
-    )
-    epoch_tmp = os.path.join(cfg.warehouse, "_epoch_tmp", _uuid.uuid4().hex)
-    try:
-        _mark("plan")
-        routed.write.mode("overwrite").partitionBy("_route").parquet(epoch_tmp)
-        _mark("route_write")
-        events_in = int(obs.get["events_in"])
-        n_quarantined = int(obs.get["n_q"] or 0)
-        n_valid = events_in - n_quarantined
-
-        # DLQ: adopt the route=dlq files verbatim (they carry a superset of
-        # the DLQ schema; reads project the table schema)
-        dlq_dir = os.path.join(epoch_tmp, "_route=dlq")
-        dlq_files = (
-            [os.path.join(dlq_dir, f) for f in sorted(os.listdir(dlq_dir)) if f.endswith(".parquet")]
-            if os.path.isdir(dlq_dir)
-            else []
-        )
-        dlq.adopt_files(dlq_files, properties={"epoch": str(epoch)}) if dlq_files else dlq._commit(
-            dlq.snapshot().files, dlq.snapshot().schema, "append-noop", {"epoch": str(epoch)}
-        )
-        _mark("dlq")
-
-        # MERGE: consume the staged winners (already deduped and tiny);
-        # touched buckets come from the route job's Observation
-        stage_dir = os.path.join(epoch_tmp, "_route=stage")
-        merge_cols = [*payload_cols, "content_sha256", "epoch", "run_id", "load_timestamp"]
-        touched = sorted(int(b) for b in (obs_buckets.get["touched"] or []))
-        if touched:
-            staged = spark_.read.parquet(stage_dir).select(*merge_cols)
-        else:
-            staged = spark_.createDataFrame([], tagged.select(*payload_cols).schema).selectExpr(
-                "*", "cast(null as string) content_sha256",
-                "cast(null as long) epoch", "cast(null as long) run_id",
-                "cast(null as timestamp) load_timestamp",
-            )
-        snap, rows_written, bucket_counts = merge_apply(
-            target, staged, ordering_cols=ORDERING_COLS, op_col="op",
-            properties={"epoch": str(epoch)}, stage_source=False,
-            tombstones=cfg.keep_tombstones, touched_buckets=touched,
-        )
-        _mark("merge")
-    finally:
-        shutil.rmtree(epoch_tmp, ignore_errors=True)
-        _mark("cleanup")
-
-    status = epoch_status(events_in, n_valid, n_quarantined)
-    end_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    commit_epoch(
-        manifest,
-        epoch=epoch, run_id=run_id, status=status, events_in=events_in,
-        rows_merged=rows_written, rows_loaded=n_valid, rows_quarantined=n_quarantined,
-        snapshot_id=snap.version, start_ts=start_ts, end_ts=end_ts,
-        partition_counts={int(b): c for b, c in bucket_counts.items()},
-    )
-    _mark("manifest")
-    log.debug("epoch %s phases: %s", epoch, _phase)
-    return {
-        "epoch": epoch, "status": status, "events_in": events_in,
-        "valid": n_valid, "quarantined": n_quarantined,
-        "rows_written": rows_written, "snapshot": snap.version,
-        "max_bucket_rows": max(bucket_counts.values(), default=0),
-        "phases": _phase,
-    }
-
-
-def _fused_plan_pieces(
+def _plan_pieces(
     cfg: ReplayConfig,
     target: LakeTable,
     events: DataFrame,
     snap,
     mult: int,
 ) -> dict:
-    """Build every epoch-invariant plan piece for the fused apply ONCE.
+    """Build every epoch-invariant plan piece of ``apply_epoch`` ONCE.
 
     Column / WindowSpec construction is Py4J-chatty: profiling showed
     ~0.4-0.5 s PER EPOCH of pure driver-side expression building (40+
     cast/alias columns x several selects), a fixed floor that dominates
     small epochs. Everything here depends only on (events schema, table
-    schema, bucket spec, tombstone mode) — the cache key in
-    ``_apply_epoch_fused`` — so a 16-epoch replay builds it once. Column
-    objects are unresolved expression trees bound to names, not to a
-    DataFrame, so reuse across epochs is sound."""
-    from pyspark.sql.window import Window
-
+    schema, bucket spec, tombstone mode, shuffle width) — the cache key in
+    ``apply_epoch`` — so a 16-epoch replay builds it once. Column objects
+    are unresolved expression trees bound to names, not to a DataFrame, so
+    reuse across epochs is sound."""
     from wage_etl_spark.operators.validate import REASON_MAX_LEN, violation_rules
     from wage_etl_spark.plans.partitioning import exact_partition_column
 
@@ -376,6 +198,9 @@ def _fused_plan_pieces(
         )
     )
     is_bad = F.size("_violations") > 0
+    # quarantined rows get a unique synthetic key: they never collapse
+    qid = F.when(is_bad, F.monotonically_increasing_id()).alias("_qid")
+    P["qid"] = qid
 
     payload_cols = [c for c in events.columns if c != "epoch"]
     stage_payload_cols = [c for c in payload_cols if c != "op"]
@@ -392,9 +217,8 @@ def _fused_plan_pieces(
     align_schema, _, _ = target._merged_schema(probe)
 
     DLQ_EXTRAS = ["raw_data", "rejection_reason", "reject_timestamp"]
-    P["dlq_extras"] = DLQ_EXTRAS
 
-    # events side: both routes; quarantined rows get a unique synthetic key
+    # events side: both routes
     ev_head = [
         F.when(is_bad, F.lit("dlq")).otherwise(F.lit("stage")).alias("_route"),
         *[F.col(c) for c in stage_payload_cols],
@@ -407,7 +231,7 @@ def _fused_plan_pieces(
             "rejection_reason"
         ),
         F.current_timestamp().alias("reject_timestamp"),
-        F.when(is_bad, F.monotonically_increasing_id()).alias("_qid"),
+        qid,
         F.lit(1).alias("_is_source"),
         (F.col("op") if "op" in events.columns else F.lit("U")).alias("_op"),
     ]
@@ -431,53 +255,26 @@ def _fused_plan_pieces(
     P["ev_cols"] = ev_cols
 
     # target side: current state re-enters the LWW resolution as is_source=0
-    t_names = [f.name for f in snap.schema.fields]
-    target_op = (
-        F.when(F.coalesce(F.col("is_deleted"), F.lit(False)), F.lit("D")).otherwise(
-            F.lit("U")
-        )
-        if "is_deleted" in t_names
-        else F.lit("U")
-    )
+    t_names = snap.schema.fieldNames()
     P["t_cols"] = [
         F.lit("stage").alias("_route"),
-        *[
-            (
-                F.col(f.name).cast(f.dataType)
-                if f.name in t_names
-                else F.lit(None).cast(f.dataType)
-            ).alias(f.name)
-            for f in align_schema.fields
-        ],
+        *align_columns(align_schema, t_names),
         *[F.lit(None).cast("string").alias(c) for c in ("raw_data", "rejection_reason")],
         F.lit(None).cast("timestamp").alias("reject_timestamp"),
         F.lit(None).cast("long").alias("_qid"),
         F.lit(0).alias("_is_source"),
-        target_op.alias("_op"),
+        reentry_op(t_names).alias("_op"),
     ]
     # align events side to the evolved schema column order
     ev_names = {"_route", *stage_payload_cols, "content_sha256", "epoch", "run_id",
                 "load_timestamp", *DLQ_EXTRAS, "_qid", "_is_source", "_op"}
     P["ev_align_cols"] = [
-        "_route",
-        *[
-            (
-                F.col(f.name).cast(f.dataType)
-                if f.name in ev_names
-                else F.lit(None).cast(f.dataType)
-            ).alias(f.name)
-            for f in align_schema.fields
-        ],
-        *DLQ_EXTRAS, "_qid", "_is_source", "_op",
+        "_route", *align_columns(align_schema, ev_names), *DLQ_EXTRAS, "_qid", "_is_source", "_op",
     ]
 
-    # THE shuffle: one collision-free bucket repartition; winners via
-    # bucket-local sort+lag (same tie order as the merge)
-    ordering_ext = [*ORDERING_COLS, "_is_source"]
-    tail = [
-        f.name for f in align_schema.fields
-        if f.name not in key_cols and f.name not in ordering_ext
-    ]
+    # THE shuffle: one collision-free bucket repartition; winners via the
+    # bucket-local lww_keep sort (the tie order merge_apply uses), grouped
+    # by (key, _qid) so quarantined rows all survive
     P["bucket_col"] = bucket_expr(key_cols, snap.num_buckets)
     if mult > 1:
         P["salt_col"] = F.pmod(
@@ -492,26 +289,13 @@ def _fused_plan_pieces(
 
     P["pt_of"] = pt_of
     P["pt_col"] = pt_of(F.col("_b"), snap.num_buckets)
-    w = Window.partitionBy("_pt").orderBy(
-        *[F.col(c).asc() for c in key_cols],
-        F.col("_qid").asc(),
-        *[F.col(c).desc() for c in ordering_ext],
-        *[F.col(c).desc() for c in tail],
-    )
-    group = F.struct(*[F.col(c) for c in key_cols], F.col("_qid"))
-    P["keep_col"] = ~F.lag(group).over(w).eqNullSafe(group)
-
-    schema = align_schema
-    if cfg.keep_tombstones and "is_deleted" not in [f.name for f in schema.fields]:
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        schema = StructType(list(schema.fields) + [StructField("is_deleted", BooleanType())])
-    P["schema"] = schema
+    P["keep_col"] = lww_keep(align_schema.fieldNames(), key_cols, ORDERING_COLS, ["_qid"])
+    P["schema"] = with_tombstones(align_schema) if cfg.keep_tombstones else align_schema
     P["tombstone_col"] = F.when(F.col("_route") == "stage", F.col("_op") == "D")
     return P
 
 
-def _apply_epoch_fused(
+def apply_epoch(
     spark: SparkSession,
     cfg: ReplayConfig,
     target: LakeTable,
@@ -523,24 +307,37 @@ def _apply_epoch_fused(
     events_in: int | None = None,
     chunk: list[int] | None = None,
     events_in_by_epoch: dict[int, int] | None = None,
-    prune: bool = False,
 ) -> dict:
-    """The single-shuffle LWW apply: ONE write job per epoch.
+    """Validate -> route (DLQ | LWW winners) -> MERGE -> manifest, one epoch,
+    in ONE write job.
 
-    Unions the target state with the epoch's tagged events, repartitions
-    ONCE on the bucket id, resolves LWW winners with the same bucket-local
-    sort the merge uses, and writes a single output partitioned by (route,
-    bucket): the DLQ adopts its files, the target adopts the stage files as
-    a copy-on-write state replacement (``overwrite_with_files``). Identical
-    snapshot/manifest exactly-once protocol — old files stay on disk, so
-    rollback and resume are unchanged.
+    ``events_in``: caller-known row count of ``events`` (e.g. from the epoch
+    source's parquet footers); otherwise it is counted.
 
-    ``prune=True`` (the ``auto`` strategy): one slim aggregate counts the
-    events per bucket first. Its keys are the touched set — only those
-    buckets' target files are read and rewritten, every other bucket's
-    files carry over — and its sum is ``events_in`` when the caller does
-    not know it. ``prune=False`` (``fused``) rewrites the whole table and
-    skips the count: for dense epochs that touch every bucket anyway.
+    Unions the target state with the epoch's tagged events (quarantined rows
+    under a unique synthetic key), repartitions ONCE on the bucket id,
+    resolves LWW winners with the bucket-local ``lww_keep`` sort and writes a
+    single output partitioned by (route, bucket): the DLQ adopts its files,
+    the target adopts the stage files as a copy-on-write state replacement
+    (``overwrite_with_files``). Old files stay on disk, so rollback and
+    resume follow the snapshot/manifest exactly-once protocol.
+
+    ``cfg.dedup_strategy`` picks the plan's shape:
+
+    - ``auto``: one slim aggregate counts the events per bucket first. Its
+      keys are the touched set — only those buckets' target files are read
+      and rewritten, every other bucket's files carry over, and the shuffle
+      has one reducer per touched bucket — and its sum is ``events_in`` when
+      the caller does not know it.
+    - ``shuffle``: ``auto`` plus an argmax pre-collapse (``dedup_lww``) of
+      the narrow tagged events before any derived column is built; the
+      bucket count still reads the raw events.
+    - ``fused``: unpruned — rewrites the whole table and skips the count.
+
+    Counters come from the bucket count or the caller and from parquet
+    footers — no ``Observation`` (``Observation.get`` deadlocks inside a
+    ``foreachBatch`` micro-batch), and nothing is ever read back from the
+    DLQ (which grows with every epoch).
 
     Catch-up chunks: with ``chunk=[a..b]`` the SAME plan applies all of the
     range's events at once (``events`` = the range scan, rows keeping their
@@ -554,7 +351,7 @@ def _apply_epoch_fused(
     import time as _time
     import uuid as _uuid
 
-    spark_ = events.sparkSession
+    _check_no_renames(target)
     start_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     _t0 = _time.monotonic()
     _phase = {}
@@ -567,20 +364,18 @@ def _apply_epoch_fused(
     snap = target.snapshot()
 
     # shuffle width: sub-split each bucket into key-pure salt partitions so
-    # the single fused stage runs num_buckets*mult tasks instead of being
-    # capped at num_buckets — the salt is a hash OF THE KEY (decorrelated
-    # from the bucket hash by a constant), so every key's rows still land in
+    # the single stage fills the session's cores instead of being capped at
+    # num_buckets tasks — the salt is a hash OF THE KEY (decorrelated from
+    # the bucket hash by a constant), so every key's rows still land in
     # exactly one partition and the bucket-local LWW sort stays correct; the
     # write stays bucket-pure with mult files per bucket.
-    mult = cfg.fused_shuffle_multiplier
-    if mult is None:
-        mult = max(1, min(8, spark.sparkContext.defaultParallelism // snap.num_buckets))
+    mult = max(1, min(8, spark.sparkContext.defaultParallelism // snap.num_buckets))
 
-    # Plan-piece cache (see _fused_plan_pieces): every expression below
-    # depends only on this key, so a multi-epoch replay pays the Py4J-heavy
-    # Column construction once, not per epoch. Schema evolution (a later
-    # epoch adding columns, or the first fused commit widening the target)
-    # changes the key and rebuilds.
+    # Plan-piece cache (see _plan_pieces): every expression below depends
+    # only on this key, so a multi-epoch replay pays the Py4J-heavy Column
+    # construction once, not per epoch. Schema evolution (a later epoch
+    # adding columns, or the first commit widening the target) changes the
+    # key and rebuilds.
     cache_key = (
         tuple((f.name, str(f.dataType)) for f in events.schema.fields),
         tuple((f.name, str(f.dataType)) for f in snap.schema.fields),
@@ -589,21 +384,13 @@ def _apply_epoch_fused(
         bool(cfg.keep_tombstones),
         mult,
     )
-    if cfg.extra.get("_fused_plan_key") != cache_key:
-        cfg.extra["_fused_plan"] = _fused_plan_pieces(cfg, target, events, snap, mult)
-        cfg.extra["_fused_plan_key"] = cache_key
-    P = cfg.extra["_fused_plan"]
+    if cfg.extra.get("_plan_key") != cache_key:
+        cfg.extra["_plan"] = _plan_pieces(cfg, target, events, snap, mult)
+        cfg.extra["_plan_key"] = cache_key
+    P = cfg.extra["_plan"]
     schema = P["schema"]
 
     tagged = events.withColumn("_violations", P["violations"])
-    # counters WITHOUT an Observation: Observation.get deadlocks inside a
-    # foreachBatch micro-batch (the listener event for the nested batch
-    # action never fires), and fused runs under the streaming front-end
-    # too. events_in comes from the caller when the epoch source knows it
-    # from parquet footers (EpochSource.epoch_rows — zero jobs), else from
-    # the per-bucket count when pruning, else from a metadata-only count
-    # (row-group footers, no data read); quarantined comes from the DLQ
-    # output files' footers.
     if chunk is not None and events_in_by_epoch is None:
         # one slim agg job (epoch column only) when the source can't provide
         # footer counts for the range
@@ -613,11 +400,14 @@ def _apply_epoch_fused(
         }
         for e in chunk:
             events_in_by_epoch.setdefault(e, 0)
-    # events side (both routes) aligned to the evolved schema column order;
-    # target side: current state re-enters the LWW resolution as is_source=0
-    ev_side = tagged.select(*P["ev_cols"](epoch, run_id)).select(*P["ev_align_cols"])
+
+    def ev_side_of(df: DataFrame) -> DataFrame:
+        """Both routes, aligned to the evolved schema column order."""
+        return df.select(*P["ev_cols"](epoch, run_id)).select(*P["ev_align_cols"])
+
+    ev_side = ev_side_of(tagged)
     touched = None
-    if prune:
+    if cfg.dedup_strategy != "fused":
         per_bucket = ev_side.groupBy(P["bucket_col"]).count().collect()
         touched = {int(b) for b, _ in per_bucket}
         if events_in is None:
@@ -626,15 +416,19 @@ def _apply_epoch_fused(
         events_in = (
             sum(events_in_by_epoch.values()) if chunk is not None else events.count()
         )
+    if cfg.dedup_strategy == "shuffle":
+        # argmax pre-collapse on the narrow tagged events, before sha256 /
+        # to_json run: quarantined rows get a unique _qid and pass through
+        keyed = tagged.select("*", P["qid"])
+        ev_side = ev_side_of(dedup_lww(keyed, [*snap.key_cols, "_qid"], ORDERING_COLS))
     t_side = target.read(buckets=touched).select(*P["t_cols"])
     unioned = t_side.unionByName(ev_side)
 
     # THE shuffle: one collision-free bucket repartition (combo i -> reducer
     # i exactly, plans/partitioning.py — a raw repartition on the combo hash
-    # leaves ~1/e of the reducers empty); winners via bucket-local sort+lag
-    # (same tie order as the merge: ordering desc, is_source desc, tail
-    # desc). The window partitions by the token (a bijection of the combo),
-    # so no second exchange is added.
+    # leaves ~1/e of the reducers empty); winners via the bucket-local
+    # lww_keep sort. The window partitions by the token (a bijection of the
+    # combo), so no second exchange is added.
     bucketed = unioned.withColumn("_b", P["bucket_col"])
     if mult > 1:
         bucketed = bucketed.withColumn("_salt", P["salt_col"])
@@ -663,7 +457,7 @@ def _apply_epoch_fused(
         _mark("plan")
         if touched != set():  # an empty pruned epoch has nothing to write
             result.write.mode("overwrite").partitionBy("_route", "_b").parquet(epoch_tmp)
-        _mark("fused_write")
+        _mark("write")
 
         def _bucket_files(route: str) -> dict[str, list[str]]:
             rdir = os.path.join(epoch_tmp, f"_route={route}")
@@ -742,7 +536,7 @@ def _apply_epoch_fused(
             partition_counts={int(b): c for b, c in bucket_counts.items()},
         )
         _mark("manifest")
-        log.debug("epochs %s fused-chunk phases: %s", chunk, _phase)
+        log.debug("epochs %s chunk phases: %s", chunk, _phase)
         return {
             "epoch": epoch, "epochs": list(chunk), "per_epoch": per_epoch,
             "status": per_epoch[-1]["status"], "events_in": events_in,
@@ -760,7 +554,7 @@ def _apply_epoch_fused(
         partition_counts={int(b): c for b, c in bucket_counts.items()},
     )
     _mark("manifest")
-    log.debug("epoch %s fused phases: %s", epoch, _phase)
+    log.debug("epoch %s phases: %s", epoch, _phase)
     return {
         "epoch": epoch, "status": status, "events_in": events_in,
         "valid": n_valid, "quarantined": n_quarantined,
@@ -808,7 +602,7 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
     while e <= stop:
         _t0 = _time.monotonic()
         b = min(e + chunk_size - 1, stop)
-        if b > e and cfg.dedup_strategy == "fused" and hasattr(source, "epochs"):
+        if b > e and hasattr(source, "epochs"):
             chunk = list(range(e, b + 1))
             counts: dict[int, int] | None = {}
             for ce in chunk:
@@ -817,10 +611,9 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
                     counts = None
                     break
                 counts[ce] = c
-            res = _apply_epoch_fused(
+            res = apply_epoch(
                 spark, cfg, target, dlq, manifest, source.epochs(e, b),
-                chunk[-1], run_id, events_in=None, chunk=chunk,
-                events_in_by_epoch=counts,
+                chunk[-1], run_id, chunk=chunk, events_in_by_epoch=counts,
             )
         else:
             res = apply_epoch(
@@ -849,7 +642,7 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
 def reference_state(events: DataFrame) -> DataFrame:
     """Independent Spark-side reference replay for large-scale verification:
     global LWW via the *window* implementation (a different code path from
-    the argmax + copy-on-write merge the engine uses), valid events only,
+    the bucket-local sort + lag apply the engine uses), valid events only,
     final op D means the key is absent. Returns (repo, path, content_sha256).
 
     Semantics note: global LWW equals epoch-by-epoch replay whenever versions

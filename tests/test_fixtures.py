@@ -13,6 +13,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+import pytest
+
 from wage_etl_spark.sources.fixtures import fixture_df
 
 ROWS = [
@@ -51,6 +53,25 @@ def test_single_partition_and_no_python_stage(spark):
     assert df.rdd.getNumPartitions() == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
+    # the Arrow path is a JVM local relation; pickled rows scan an RDD
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_duplicate_column_names_raise(spark):
+    with pytest.raises(ValueError, match="duplicate column names \\['x'\\]"):
+        fixture_df(spark, [("a", "b")], "x string, x string")
+
+
+def test_arrow_disabled_raises(spark):
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        with pytest.raises(ValueError, match="arrow"):
+            fixture_df(spark, ROWS, DDL)
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_backticked_column_names(spark):

@@ -167,6 +167,25 @@ def test_rename_key_column_keeps_merging(spark, warehouse):
     assert t.read().count() == 3 and snap.key_cols == ["repo", "file_path"]
 
 
+def test_overwrite_with_files_refuses_buckets_outside_touched(spark, warehouse, tmp_path):
+    """A pruned splice must never replace a bucket whose rows were not read:
+    a written bucket outside ``touched`` raises before anything moves or
+    commits."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = make(spark, warehouse)
+    t.append(spark.createDataFrame([("r1", "a", 1), ("r2", "b", 1)], SCHEMA))
+    before = t.snapshot()
+    stray = str(tmp_path / "stray.parquet")
+    pq.write_table(pa.table({"repo": ["r9"], "path": ["z"], "v": [2]}), stray)
+    with pytest.raises(ValueError, match=r"buckets \[3\] .* outside the touched set \[1\]"):
+        t.overwrite_with_files({"3": [stray]}, touched={1})
+    assert t.current_version() == before.version and os.path.exists(stray)
+
+
 def test_snapshot_write_is_crash_atomic(spark, warehouse, tmp_path):
     """A leftover truncated temp file must never wedge history()/resume,
     and a committed snap file is always complete JSON (fsync+link)."""

@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from wage_etl_spark.lake.table import LakeTable
+from wage_etl_spark.lake.table import LakeTable, bucket_expr
 from wage_etl_spark.operators.merge import merge_apply
 from wage_etl_spark.streaming.replay import TARGET_SCHEMA, KEY_COLS, ORDERING_COLS
 
@@ -146,31 +146,74 @@ def test_narrow_numeric_key_buckets_against_table_type(spark, warehouse):
 
 def test_merge_is_single_shuffle(spark, warehouse, monkeypatch):
     """VERDICT r2 #5: the MERGE write must move rows through exactly ONE
-    exchange — the repartition on the bucket id. The LWW winner resolution
-    is a bucket-local sort (Window.partitionBy(_b) is satisfied by that
-    partitioning), and _write_files writes prepartitioned output without
-    re-shuffling. Counting Exchange nodes is noise-immune proof."""
+    exchange — the repartition on the bucket slot token. The LWW winner
+    resolution is a bucket-local sort (the window partitions by that
+    token), and the partitioned write adds no re-shuffle. Counting Exchange
+    nodes is noise-immune proof."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     t = make_target(spark, warehouse)
     merge_apply(t, _src(spark, [
         (f"r{i}", f"p{i}", "1" * 40, i, "py", f"c{i}", "I") for i in range(100)
     ]), ORDERING_COLS)
 
     captured = {}
-    orig = LakeTable._write_files
+    orig = DataFrameWriter.parquet
 
-    def spy(self, df, snap, prepartitioned=False):
-        captured["plan"] = df._jdf.queryExecution().sparkPlan().toString()
-        captured["prepartitioned"] = prepartitioned
-        return orig(self, df, snap, prepartitioned=prepartitioned)
+    def spy(self, path, *a, **k):
+        captured["plan"] = self._df._jdf.queryExecution().sparkPlan().toString()
+        return orig(self, path, *a, **k)
 
-    monkeypatch.setattr(LakeTable, "_write_files", spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     merge_apply(
         t,
         _src(spark, [("r5", "p5", "2" * 40, 999, "py", "new", "U")]),
         ORDERING_COLS,
-        stage_source=False,
     )
-    assert captured["prepartitioned"] is True
     n_exchanges = captured["plan"].count("Exchange")
     assert n_exchanges == 1, f"expected 1 exchange, got {n_exchanges}:\n{captured['plan']}"
     assert "Window" in captured["plan"] or "Sort" in captured["plan"]
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_sparse_merge_is_four_jobs_and_pruned(spark, warehouse):
+    """A 10-row merge_apply into a 32-bucket table runs the epoch apply's
+    pruned plan: at most 4 Spark jobs (the per-bucket count and the write,
+    each a map stage plus a result stage), every untouched bucket keeps its
+    exact file list, and the state is the expected upsert/delete result."""
+    t = make_target(spark, warehouse, nb=32)
+    boot = [(f"r{i}", f"p{i}", "1" * 40, i, "py", f"c{i}", "I") for i in range(500)]
+    merge_apply(t, _src(spark, boot), ORDERING_COLS)
+    before = t.snapshot().files
+
+    src = _src(spark, [
+        *[(f"r{i}", f"p{i}", "2" * 40, 1000 + i, "py", f"new{i}", "U") for i in range(6)],
+        ("r6", "p6", "2" * 40, 1006, "py", None, "D"),
+        ("r7", "p7", "0" * 40, 0, "py", "stale", "U"),  # loses to the target row
+        ("x1", "q1", "2" * 40, 1, "py", "ins1", "I"),
+        ("x2", "q2", "2" * 40, 1, "py", "ins2", "I"),
+    ])
+    touched = {
+        int(r["_b"]) for r in src.select(
+            bucket_expr(KEY_COLS, 32).alias("_b")
+        ).collect()
+    }
+    j0 = _next_job_id(spark)
+    snap, rows, per_bucket = merge_apply(t, src, ORDERING_COLS)
+    jobs = _next_job_id(spark) - j0
+    assert jobs <= 4, f"10-row merge_apply ran {jobs} Spark jobs"
+
+    assert set(map(int, per_bucket)) <= touched and rows == sum(per_bucket.values())
+    for b, fs in before.items():
+        if int(b) not in touched:
+            assert snap.files.get(b) == fs, f"untouched bucket {b} was rewritten"
+
+    expected = {(f"r{i}", f"p{i}"): f"c{i}" for i in range(500)}
+    expected.update({(f"r{i}", f"p{i}"): f"new{i}" for i in range(6)})
+    del expected[("r6", "p6")]
+    expected.update({("x1", "q1"): "ins1", ("x2", "q2"): "ins2"})
+    assert {k: v[2] for k, v in _state(t).items()} == expected
+    assert t.read().count() == len(expected)

@@ -49,28 +49,9 @@ def test_validation_has_no_row_python(spark):
     ev = synthesize_events(spark, n_events=100, n_keys=10, n_epochs=1)
     valid, q = validate_events(ev, 1)
     r = assert_plan(q, no_row_python=True)
-    # the hot validation path is now PURE JVM (rlike replaced the pandas
-    # commit-shape UDF — zero Python round-trips per epoch); the Arrow UDF
-    # surface itself is covered by test_commit_shape_ok_arrow below
+    # the hot validation path is PURE JVM (rlike replaced the pandas
+    # commit-shape UDF — zero Python round-trips per epoch)
     assert not r.has_arrow_udf and not r.has_python_row_udf
-
-
-def test_commit_shape_ok_arrow(spark):
-    """The canonical Arrow-UDF surface: commit_shape_ok plans as
-    ArrowEvalPython (never BatchEvalPython) and agrees with the JVM rlike
-    the hot path uses."""
-    from wage_etl_spark.operators.validate import commit_shape_ok
-
-    df = spark.createDataFrame(
-        [("a" * 40,), ("A" * 40,), ("0" * 39,), ("f" * 41,), (None,)], ["commit"]
-    ).withColumn("arrow_ok", commit_shape_ok(F.col("commit"))).withColumn(
-        "jvm_ok", F.coalesce(F.col("commit").rlike("^[0-9a-f]{40}$"), F.lit(False))
-    )
-    r = assert_plan(df, no_row_python=True)
-    assert r.has_arrow_udf
-    rows = df.collect()
-    assert [bool(x["arrow_ok"]) for x in rows] == [x["jvm_ok"] for x in rows]
-    assert [x["jvm_ok"] for x in rows] == [True, False, False, False, False]
 
 
 def test_topk_query_broadcasts_queries_side(spark):

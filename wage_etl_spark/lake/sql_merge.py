@@ -1,13 +1,14 @@
 """``MERGE INTO`` SQL front-end over LakeTable (VERDICT r4 #5).
 
-The engine's upsert surface is ``operators.merge.merge_apply``; production
-Iceberg exposes the same capability as ``MERGE INTO`` SQL. This module makes
-the swap a CONFIG change, not an API migration: the exact SQL string a user
-would hand to ``spark.sql(...)`` on a real Iceberg catalog parses here and
-dispatches to ``merge_apply`` with identical semantics
-(tests/test_sql_merge.py pins them; the backend-parametrized contract case
-in tests/test_lake_contract.py runs the same statement shape against a real
-Iceberg catalog whenever a jar is present).
+The engine's upsert surface is ``operators.merge.merge_apply``, the same
+LWW kernel every replay epoch runs; production Iceberg exposes the same
+capability as ``MERGE INTO`` SQL. This module makes the swap a CONFIG
+change, not an API migration: the exact SQL string a user would hand to
+``spark.sql(...)`` on a real Iceberg catalog parses here and dispatches to
+``merge_apply`` with identical semantics (tests/test_sql_merge.py pins them;
+the backend-parametrized contract case in tests/test_lake_contract.py runs
+the same statement shape against a real Iceberg catalog whenever a jar is
+present).
 
 Supported grammar (the Iceberg copy-on-write CDC shape):
 
@@ -27,9 +28,10 @@ Supported grammar (the Iceberg copy-on-write CDC shape):
   half-apply).
 - MERGE semantics, not LWW: a matched source row REPLACES the target row
   unconditionally (Iceberg evaluates no version ordering). Internally that
-  is ``merge_apply(ordering_cols=[])`` — the ``_is_source`` tie-break alone
-  decides, so the source always wins. Engine users who want version-ordered
-  LWW keep calling ``merge_apply``/``replay`` directly.
+  is ``merge_apply(ordering_cols=[])``: with no version columns in the
+  kernel's sort, the ``_is_source`` tie-break alone decides, so the source
+  always wins. Engine users who want version-ordered LWW keep calling
+  ``merge_apply``/``replay`` directly.
 - Like Iceberg, a source with several rows for one key is an ERROR
   (non-deterministic merge); detected with one slim aggregate over the
   source keys.

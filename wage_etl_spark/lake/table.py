@@ -5,9 +5,10 @@ snapshot layer implementing the same contract the north rule needs from
 Iceberg: atomic snapshot commits, copy-on-write MERGE with partition (bucket)
 pruning, schema evolution on write, snapshot properties (WAP-style epoch
 tags), rollback, and time travel. On a production cluster this class is a
-drop-in seam: every call site goes through ``merge_apply``/``append``/``read``
-and can be re-pointed at ``spark.sql("MERGE INTO ...")`` over a real Iceberg
-catalog without touching the operators.
+drop-in seam: every upsert goes through the one LWW kernel
+(``operators.merge``) and lands via ``overwrite_with_files``; it and
+``append``/``read`` can be re-pointed at ``spark.sql("MERGE INTO ...")`` over
+a real Iceberg catalog without touching the operators.
 
 Physical layout::
 
@@ -136,6 +137,26 @@ def bucket_expr(key_cols: list[str], num_buckets: int):
     """Stable hash bucket of the natural key — xxhash64 is version-stable in
     Spark, so bucket assignment survives re-runs and engine upgrades."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+
+
+def bucket_files(path: str) -> dict[str, list[str]]:
+    """Bucket id -> the parquet files of a ``partitionBy("_b")`` write."""
+    out: dict[str, list[str]] = {}
+    for bdir in sorted(os.listdir(path)) if os.path.isdir(path) else []:
+        if bdir.startswith("_b="):
+            d = os.path.join(path, bdir)
+            out[str(int(bdir[3:]))] = [
+                os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+            ]
+    return out
+
+
+def to_physical(df: DataFrame, renames: dict[str, str]) -> DataFrame:
+    """``df`` with renamed columns mapped back to the physical names the
+    table's files carry (``renames``: physical name -> logical name)."""
+    if not renames:
+        return df  # no new DataFrame to analyze
+    return df.withColumnsRenamed({new: old for old, new in renames.items()})
 
 
 class LakeTable:
@@ -272,10 +293,7 @@ class LakeTable:
         if not files:
             return self.spark.createDataFrame([], snap.schema)
         df = self.spark.read.schema(self._physical_schema(snap)).parquet(*files)
-        for old, new in snap.renames.items():
-            if old in df.columns:
-                df = df.withColumnRenamed(old, new)
-        return df
+        return df.withColumnsRenamed(snap.renames)
 
     def _physical_schema(self, snap: Snapshot) -> StructType:
         """Schema with logical renames undone — matches what is in the files."""
@@ -287,53 +305,26 @@ class LakeTable:
 
     # ----------------------------------------------------------------- write
 
-    def _write_files(
-        self, df: DataFrame, snap: Snapshot, prepartitioned: bool = False
-    ) -> dict[str, list[str]]:
+    def _write_files(self, df: DataFrame, snap: Snapshot) -> dict[str, list[str]]:
         """Write df bucketed by key into a fresh commit dir; returns the
         bucket -> relative-path map. One parquet file per bucket: the
         repartition below is the only shuffle, and downstream MERGE reads
-        are pruned per bucket.
+        are pruned per bucket."""
+        from wage_etl_spark.plans.partitioning import repartition_exact
 
-        ``prepartitioned=True``: df already carries a correct ``_b`` column
-        AND is hash-partitioned on it (e.g. the single-shuffle MERGE plan) —
-        write directly, adding NO exchange. partitionBy still splits by
-        value, so files stay bucket-pure, one file per bucket."""
-        commit_dir = f"{uuid.uuid4().hex}"
-        out_path = os.path.join(self.data_dir, commit_dir)
-        physical = df
-        for old, new in snap.renames.items():
-            if new in physical.columns:
-                physical = physical.withColumnRenamed(new, old)
-        if not prepartitioned:
-            from wage_etl_spark.plans.partitioning import repartition_exact
-
-            # collision-free bucket->reducer assignment (partitioning.py)
-            physical = repartition_exact(
-                physical.withColumn("_b", bucket_expr([
-                    {v: k for k, v in snap.renames.items()}.get(c, c)
-                    for c in snap.key_cols
-                ], snap.num_buckets)),
-                F.col("_b"), snap.num_buckets,
-            ).drop("_pt")
-        (
-            physical
-            .write.partitionBy("_b")
-            .mode("append")
-            .parquet(out_path)
-        )
-        files: dict[str, list[str]] = {}
-        if os.path.exists(out_path):
-            for bdir in os.listdir(out_path):
-                if not bdir.startswith("_b="):
-                    continue
-                b = str(int(bdir.split("=")[1]))
-                for fn in os.listdir(os.path.join(out_path, bdir)):
-                    if fn.endswith(".parquet"):
-                        files.setdefault(b, []).append(
-                            os.path.join("data", commit_dir, bdir, fn)
-                        )
-        return files
+        out_path = os.path.join(self.data_dir, uuid.uuid4().hex)
+        # collision-free bucket->reducer assignment (partitioning.py)
+        physical = repartition_exact(
+            to_physical(
+                df.withColumn("_b", bucket_expr(snap.key_cols, snap.num_buckets)), snap.renames
+            ),
+            F.col("_b"), snap.num_buckets,
+        ).drop("_pt")
+        physical.write.partitionBy("_b").mode("append").parquet(out_path)
+        return {
+            b: [os.path.relpath(p, self.root) for p in fs]
+            for b, fs in bucket_files(out_path).items()
+        }
 
     def _merged_schema(self, df: DataFrame) -> tuple[StructType, DataFrame, bool]:
         """Schema-evolution-on-write: union of current schema and df's schema
@@ -529,6 +520,16 @@ class LakeTable:
         snap = self.snapshot()
         return self._commit({}, snap.schema, "truncate", properties or {}, parent=snap)
 
+    def _move_in(self, commit_dir: str, bucket: str, abs_paths: list[str]) -> list[str]:
+        """Move written files into ``data/<commit_dir>/_b=<bucket>/``;
+        returns their table-relative paths."""
+        rel_dir = os.path.join("data", commit_dir, f"_b={bucket}")
+        os.makedirs(os.path.join(self.root, rel_dir), exist_ok=True)
+        rels = [os.path.join(rel_dir, f"part-{i:05d}.parquet") for i in range(len(abs_paths))]
+        for p, rel in zip(abs_paths, rels):
+            os.rename(p, os.path.join(self.root, rel))
+        return rels
+
     def adopt_files(
         self,
         abs_paths: list[str],
@@ -540,16 +541,8 @@ class LakeTable:
         superset of the table schema; reads project the table schema only.
         Used for audit-style tables (DLQ) fed by a multi-output job."""
         snap = self.snapshot()
-        commit_dir = uuid.uuid4().hex
-        rel_dir = os.path.join("data", commit_dir, f"_b={bucket}")
-        os.makedirs(os.path.join(self.root, rel_dir), exist_ok=True)
-        rels = []
-        for i, p in enumerate(abs_paths):
-            rel = os.path.join(rel_dir, f"part-{i:05d}.parquet")
-            os.rename(p, os.path.join(self.root, rel))
-            rels.append(rel)
         merged = {b: list(fs) for b, fs in snap.files.items()}
-        merged.setdefault(bucket, []).extend(rels)
+        merged.setdefault(bucket, []).extend(self._move_in(uuid.uuid4().hex, bucket, abs_paths))
         return self._commit(merged, snap.schema, "append", properties or {}, parent=snap)
 
     def overwrite_with_files(
@@ -566,29 +559,30 @@ class LakeTable:
         from the map become empty. Otherwise only the ``touched`` buckets are
         replaced (a touched bucket absent from the map becomes empty) and
         every other bucket's file list carries over unchanged. Files may
-        carry a superset of ``schema`` (reads project the table schema). Old
-        files stay on disk (copy-on-write), so rollback and time travel keep
-        working."""
+        carry a superset of ``schema`` (reads project the table schema) and
+        must use the physical names of renamed columns (``to_physical``).
+        Old files stay on disk (copy-on-write), so rollback and time travel
+        keep working.
+
+        Raises before committing if a written bucket lies outside
+        ``touched``: its files would silently replace a bucket whose rows
+        were never read (e.g. a source that gave different rows on a second
+        read)."""
         snap = self.snapshot()
-        if snap.renames:
-            raise ValueError(
-                "overwrite_with_files does not support renamed columns "
-                "(files carry current names; physical schema expects originals)"
-            )
+        if touched is not None:
+            stray = sorted({int(b) for b in files_by_bucket} - set(touched))
+            if stray:
+                raise ValueError(
+                    f"overwrite_with_files: buckets {stray} were written but are "
+                    f"outside the touched set {sorted(touched)}"
+                )
         commit_dir = uuid.uuid4().hex
         new_files: dict[str, list[str]] = {
             b: list(fs) for b, fs in snap.files.items()
             if touched is not None and int(b) not in touched
         }
         for b, paths in files_by_bucket.items():
-            rel_dir = os.path.join("data", commit_dir, f"_b={int(b)}")
-            os.makedirs(os.path.join(self.root, rel_dir), exist_ok=True)
-            rels = []
-            for i, p in enumerate(paths):
-                rel = os.path.join(rel_dir, f"part-{i:05d}.parquet")
-                os.rename(p, os.path.join(self.root, rel))
-                rels.append(rel)
-            new_files[str(int(b))] = rels
+            new_files[str(int(b))] = self._move_in(commit_dir, str(int(b)), paths)
         return self._commit(
             new_files, schema if schema is not None else snap.schema,
             "merge", properties or {}, parent=snap,

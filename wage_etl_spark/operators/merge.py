@@ -1,5 +1,5 @@
 """MERGE-apply: copy-on-write upsert of deduped change events into a LakeTable,
-and the LWW kernel helpers it shares with the replay's epoch apply.
+and the one LWW kernel every upsert in the engine runs.
 
 Semantics = Iceberg ``MERGE INTO target t USING winners s ON t.repo=s.repo AND
 t.path=s.path WHEN MATCHED AND s.op='D' THEN DELETE WHEN MATCHED THEN UPDATE
@@ -7,30 +7,29 @@ SET * WHEN NOT MATCHED AND s.op<>'D' THEN INSERT *`` — which is itself the
 Spark-native form of the reference's ``INSERT ... ON CONFLICT DO UPDATE``
 (/root/reference/src/load/staging.py:50-59).
 
-The LWW kernel (target rows re-enter as ``_is_source=0`` next to the source
-rows, one collision-free repartition on the bucket id, a bucket-local sort +
-``lag`` keeps each key's winner) is built from the helpers below:
-``align_columns`` (cast-or-null alignment to the evolved schema),
-``reentry_op`` (tombstone re-entry), ``with_tombstones`` and ``lww_keep``
-(the one definition of the tie order). Two callers assemble it:
-``streaming.replay.apply_epoch`` (every replay and streaming epoch, with the
-DLQ route riding through the same shuffle) and ``merge_apply`` here (the
-``lake.sql_merge`` front-end and direct callers).
+``LWWKernel`` is the one assembly of the LWW kernel; both upsert front
+doors run it: ``streaming.replay.apply_epoch`` (replay and streaming epochs,
+the DLQ route riding through the same shuffle) and ``merge_apply`` here
+(``lake.sql_merge`` and direct callers; every row takes the ``stage``
+route). Its plan, and why it scales:
 
-``merge_apply``'s physical plan (why it scales):
-
-1. winners are bucketed with the *same* hash spec as the table, so the set of
-   touched buckets is exact; untouched buckets' files carry over to the new
-   snapshot untouched — an epoch touching 1% of keys rewrites ~1% of data.
-2. target-side read is pruned to touched buckets' files only (file-level
-   pruning, the LakeTable stand-in for Iceberg partition pruning).
-3. the match itself is not a join: the LWW kernel above. The write reuses
-   its partitioning — one shuffle end to end where an aggregate-then-
-   repartition plan moves every row twice. Re-applying the same epoch is
-   trivially idempotent (equal versions -> source wins -> identical bytes).
-4. op='D' winners simply drop out after the winner resolution: tombstones
-   never persist because each touched bucket is rewritten whole
-   (copy-on-write).
+1. one per-bucket count of the source gives the touched set — exact,
+   because source rows are bucketed with the table's own hash spec.
+2. only the touched buckets' target files are read (the LakeTable stand-in
+   for Iceberg partition pruning); their rows re-enter next to the source
+   as ``_is_source=0`` — a persisted tombstone as a delete, or the bucket
+   rewrite would silently undelete it.
+3. the match is not a join: ONE collision-free repartition on the
+   touched-rank slot token (one reducer per touched bucket, sub-split
+   ``mult`` ways by a key salt), then a bucket-local sort + ``lag``
+   (``lww_keep``, the one tie order) keeps each key's winner. Re-applying a
+   source is idempotent (equal versions -> source wins -> same bytes).
+4. op='D' winners drop out (each touched bucket is rewritten whole, so the
+   key disappears) or, with tombstones, persist as ``is_deleted`` rows.
+5. one ``partitionBy(_route, _b)`` write reuses the exchange's partitioning,
+   and ``LakeTable.overwrite_with_files(..., touched=)`` splices the
+   ``stage`` files in; untouched buckets' files carry over, so an epoch
+   touching 1% of keys rewrites ~1% of the data.
 
 MERGE's duplicate-source-key hazard (Iceberg raises on ambiguous matches) is
 structurally impossible here: the bucket-local sort collapses duplicate
@@ -41,11 +40,16 @@ anyway).
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from wage_etl_spark.lake.table import LakeTable, Snapshot, bucket_expr
+from wage_etl_spark.lake.table import (
+    LakeTable, Snapshot, bucket_expr, bucket_files, to_physical,
+)
+from wage_etl_spark.plans.partitioning import exact_partition_column
 
 
 def align_columns(schema: StructType, present) -> list[Column]:
@@ -59,22 +63,6 @@ def align_columns(schema: StructType, present) -> list[Column]:
         ).alias(f.name)
         for f in schema.fields
     ]
-
-
-def reentry_op(columns) -> Column:
-    """The ``_op`` a target row re-enters LWW resolution with: a persisted
-    tombstone must re-enter as a delete, or a bucket rewrite would silently
-    undelete it."""
-    if "is_deleted" not in columns:
-        return F.lit("U")
-    return F.when(F.coalesce(F.col("is_deleted"), F.lit(False)), F.lit("D")).otherwise(F.lit("U"))
-
-
-def with_tombstones(schema: StructType) -> StructType:
-    """``schema`` plus the nullable ``is_deleted`` flag readers filter on."""
-    if "is_deleted" in schema.fieldNames():
-        return schema
-    return StructType(list(schema.fields) + [StructField("is_deleted", BooleanType())])
 
 
 def lww_keep(columns, key_cols: list[str], ordering_cols: list[str], group_extra=()) -> Column:
@@ -99,61 +87,171 @@ def lww_keep(columns, key_cols: list[str], ordering_cols: list[str], group_extra
     return ~F.lag(g).over(w).eqNullSafe(g)
 
 
+def shuffle_mult(spark: SparkSession, num_buckets: int) -> int:
+    """Reducers per bucket, so the single stage fills the session's cores.
+    The salt splitting a bucket is a hash OF THE KEY, so each key's rows
+    still meet in one partition and the write stays bucket-pure."""
+    return max(1, min(8, spark.sparkContext.defaultParallelism // num_buckets))
+
+
+class LWWKernel:
+    """The single-shuffle LWW plan (steps 1-5 above) for one snapshot spec,
+    evolved ``schema``, ordering and shuffle width. Its Columns are built
+    once (Py4J-chatty) and bound to names only, so ``apply_epoch`` reuses a
+    kernel across epochs.
+
+    Source rows carry ``_route`` (only ``stage`` rows become table state),
+    ``schema``'s columns, ``_qid`` (null, or unique on a row that must never
+    collapse), ``_is_source`` = 1 and ``_op``; other columns read as nulls
+    on the target side."""
+
+    def __init__(
+        self, snap: Snapshot, schema: StructType, ordering_cols: list[str],
+        mult: int, tombstones: bool,
+    ):
+        key_cols, t_names = snap.key_cols, snap.schema.fieldNames()
+        self.num_buckets, self.mult, self.tombstones = snap.num_buckets, mult, tombstones
+        self.renames = snap.renames
+        # the committed schema: tombstones add the is_deleted flag readers filter on
+        self.schema = schema
+        if tombstones and "is_deleted" not in schema.fieldNames():
+            self.schema = StructType([*schema.fields, StructField("is_deleted", BooleanType())])
+        reentry_op = F.lit("U")
+        if "is_deleted" in t_names:
+            deleted = F.coalesce(F.col("is_deleted"), F.lit(False))
+            reentry_op = F.when(deleted, F.lit("D")).otherwise(reentry_op)
+        self.target_cols = [
+            F.lit("stage").alias("_route"),
+            *align_columns(schema, t_names),
+            F.lit(None).cast("long").alias("_qid"),
+            F.lit(0).alias("_is_source"),
+            reentry_op.alias("_op"),
+        ]
+        self.bucket_col = bucket_expr(key_cols, snap.num_buckets)
+        self.salt_col = F.pmod(
+            F.xxhash64(*[F.col(c) for c in key_cols], F.lit(0x5417)), F.lit(mult)
+        ).cast("int")
+        self.all_buckets_pt = self._pt(F.col("_b"), snap.num_buckets)
+        self.keep_col = lww_keep(
+            [*schema.fieldNames(), "_op"], key_cols, ordering_cols, ["_qid"]
+        )
+        is_stage = F.col("_route") == "stage"
+        self.tombstone_col = F.when(is_stage, F.col("_op") == "D")
+        self.live_col = ~is_stage | (F.col("_op") != "D")
+
+    def _pt(self, slot: Column, n_slots: int) -> Column:
+        """Reducer token of a row whose bucket has slot ``slot`` in
+        [0, n_slots), sub-split ``mult`` ways (combo i -> reducer i exactly,
+        plans/partitioning.py)."""
+        combo = slot * self.mult + F.col("_salt") if self.mult > 1 else slot
+        return exact_partition_column(combo, n_slots * self.mult)
+
+    def bucket_counts(self, source: DataFrame) -> dict[int, int]:
+        """Step 1: source rows per bucket — its keys are the touched set."""
+        return {int(b): int(n) for b, n in source.groupBy(self.bucket_col).count().collect()}
+
+    def write(
+        self, table: LakeTable, source: DataFrame, touched: set[int] | None, out_dir: str,
+    ) -> dict[str, dict[str, list[str]]]:
+        """Steps 2-5 into ``out_dir`` (``touched=None``: every bucket,
+        unpruned). Returns route -> bucket id -> file paths, with physical
+        column names, ready for ``overwrite_with_files``."""
+        if touched == set():
+            return {}  # an empty pruned apply has nothing to write
+        unioned = table.read(buckets=touched).select(*self.target_cols).unionByName(
+            source, allowMissingColumns=True
+        )
+        bucketed = unioned.withColumn("_b", self.bucket_col)
+        if self.mult > 1:
+            bucketed = bucketed.withColumn("_salt", self.salt_col)
+        n_slots, pt_col = self.num_buckets, self.all_buckets_pt
+        if touched is not None:
+            # reducers for the touched buckets only (slot = rank in the
+            # touched set): an untouched bucket's reducer would just run an
+            # empty task
+            ranks = sorted(touched)
+            n_slots = len(ranks)
+            slot = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b")).cast("int") - 1
+            pt_col = self._pt(slot, n_slots)
+        # THE shuffle; the window partitions by the token (a bijection of
+        # the combo), so lww_keep adds no second exchange
+        merged = (
+            bucketed.withColumn("_pt", pt_col).repartition(n_slots * self.mult, "_pt")
+            .withColumn("_keep", self.keep_col)
+            .filter(F.col("_keep"))
+        )
+        if self.tombstones:
+            merged = merged.withColumn("is_deleted", self.tombstone_col)
+        else:
+            merged = merged.filter(self.live_col)
+        result = to_physical(
+            merged.drop("_keep", "_qid", "_is_source", "_op", "_salt", "_pt"), self.renames
+        )
+        result.write.mode("overwrite").partitionBy("_route", "_b").parquet(out_dir)
+
+        return {
+            r[len("_route="):]: bucket_files(os.path.join(out_dir, r))
+            for r in os.listdir(out_dir) if r.startswith("_route=")
+        }
+
+    def splice(
+        self, table: LakeTable, files: dict[str, dict[str, list[str]]],
+        properties: dict[str, str], touched: set[int] | None,
+    ) -> tuple[Snapshot, dict[str, int]]:
+        """Commit the ``stage`` route of ``write``'s files over the touched
+        buckets; returns the snapshot and the rows per rewritten bucket
+        (parquet footers, no Spark job)."""
+        snap = table.overwrite_with_files(
+            files.get("stage", {}), schema=self.schema, properties=properties, touched=touched
+        )
+        return snap, table.file_row_counts(
+            {b: fs for b, fs in snap.files.items() if touched is None or int(b) in touched}
+        )
+
+
 def merge_apply(
     table: LakeTable,
     winners: DataFrame,
     ordering_cols: list[str],
     op_col: str = "op",
     properties: dict[str, str] | None = None,
-    stage_source: bool = True,
-    tombstones: bool = False,
 ) -> tuple[Snapshot, int, dict[str, int]]:
     """Apply deduped winners to the table; returns
     (snapshot, rows_written, rows_per_bucket).
 
     ``winners`` must contain the table's key columns, the ordering columns,
     an op column in {I,U,D}, and any payload columns (new payload columns
-    trigger schema evolution on write).
-
-    ``stage_source=True`` materializes the (already deduped, hence small)
-    winners to a staging parquet first, so the expensive upstream pipeline
-    (scan + validate + dedup) runs exactly once — the touched-bucket probe
-    and the merge then read the staged winners, not the raw events.
+    trigger schema evolution on write), under the table's current column
+    names. It is read twice (count, then write) and must give the same rows
+    both times; the splice refuses a write outside the counted buckets.
     """
-    import shutil
-    import uuid as _uuid
-
     snap = table.snapshot()
-
-    staging_dir = None
-    if stage_source:
-        staging_dir = os.path.join(table.root, "_staging", _uuid.uuid4().hex)
-        winners.write.mode("overwrite").parquet(staging_dir)
-        winners = table.spark.read.parquet(staging_dir)
-
-    try:
-        return _merge_apply_inner(table, winners, ordering_cols, op_col, properties, snap, tombstones)
-    finally:
-        if staging_dir:
-            shutil.rmtree(staging_dir, ignore_errors=True)
-
-
-def _merge_apply_inner(table, winners, ordering_cols, op_col, properties, snap, tombstones):
     key_cols = snap.key_cols
-    # 0. key columns must be hashed at the TABLE's key types: xxhash64(int)
-    #    != xxhash64(long), so a numeric key arriving narrower than the
-    #    snapshot type (legal since type widening landed) would bucket
-    #    against the wrong buckets and break bucket purity. Cast up first —
-    #    a no-op when types already match (the engine's keys are strings).
+    # key columns must be hashed at the TABLE's key types: xxhash64(int) !=
+    # xxhash64(long), so a numeric key arriving narrower than the snapshot
+    # type (legal since type widening landed) would bucket against the wrong
+    # buckets and break bucket purity. Cast up first — a no-op when types
+    # already match (the engine's keys are strings).
     snap_types = {f.name: f.dataType for f in snap.schema.fields}
     for k in key_cols:
         if k in snap_types and winners.schema[k].dataType != snap_types[k]:
             winners = winners.withColumn(k, F.col(k).cast(snap_types[k]))
 
-    # 1. bucket the source and find touched buckets (a tiny distinct-collect
-    #    probe, <= N ints)
-    src = winners.withColumn("_b", bucket_expr(key_cols, snap.num_buckets))
-    touched = sorted(r["_b"] for r in src.select("_b").distinct().collect())
+    # schema evolution: union of table schema and source payload schema
+    schema, _, _ = table._merged_schema(winners.drop(op_col))
+    kernel = LWWKernel(
+        snap, schema, ordering_cols, shuffle_mult(table.spark, snap.num_buckets),
+        tombstones=False,
+    )
+    src_op = F.col(op_col) if op_col in winners.columns else F.lit("U")
+    src = winners.select(
+        F.lit("stage").alias("_route"),
+        *align_columns(schema, winners.columns),
+        F.lit(None).cast("long").alias("_qid"),
+        F.lit(1).alias("_is_source"),
+        src_op.alias("_op"),
+    )
+    touched = set(kernel.bucket_counts(src))
     if not touched:
         return (
             table._commit(snap.files, snap.schema, "merge-noop", properties or {}, parent=snap),
@@ -161,62 +259,10 @@ def _merge_apply_inner(table, winners, ordering_cols, op_col, properties, snap, 
             {},
         )
 
-    # 2. schema evolution: union of table schema and source payload schema
-    schema, _, _ = table._merged_schema(winners.drop(op_col))
-
-    # 3. pruned target read: only files of touched buckets. Files are
-    #    bucket-pure but may contain keys of other buckets only if the bucket
-    #    spec changed; keep a cheap belt-and-braces filter that Catalyst
-    #    folds into the scan
-    target = table.read(buckets=set(touched))
-    target = target.withColumn("_b", bucket_expr(key_cols, snap.num_buckets)).filter(
-        F.col("_b").isin(*touched)
-    ).drop("_b")
-
-    # 4. both sides aligned to the evolved schema + merge metadata columns
-    src_op = F.col(op_col) if op_col in winners.columns else F.lit("U")
-    unioned = target.select(
-        *align_columns(schema, target.columns), F.lit(0).alias("_is_source"),
-        reentry_op(target.columns).alias("_op"),
-    ).unionByName(
-        src.select(
-            *align_columns(schema, winners.columns), F.lit(1).alias("_is_source"),
-            src_op.alias("_op"),
-        )
-    )
-
-    # 5. LWW winners, SINGLE-SHUFFLE: one collision-free repartition on the
-    #    bucket id (bucket i -> reducer i exactly, plans/partitioning.py),
-    #    the bucket-local lww_keep sort, and a partitionBy(_b) write with NO
-    #    further repartition. Without tombstones, deletes drop out (the
-    #    whole bucket is rewritten, so the key simply disappears — valid when
-    #    epochs arrive in version order). With tombstones, the delete
-    #    persists as an is_deleted row so a LATE lower-version event cannot
-    #    resurrect the key (required for out-of-order micro-batches).
-    from wage_etl_spark.plans.partitioning import repartition_exact
-
-    bucketed = repartition_exact(
-        unioned.withColumn("_b", bucket_expr(key_cols, snap.num_buckets)),
-        F.col("_b"), snap.num_buckets,
-    )
-    merged = (
-        bucketed.withColumn("_keep", lww_keep(unioned.columns, key_cols, ordering_cols))
-        .filter(F.col("_keep"))
-        .drop("_keep", "_pt")
-    )
-    if tombstones:
-        result = merged.withColumn("is_deleted", F.col("_op") == "D").drop("_is_source", "_op")
-        schema = with_tombstones(schema)
-    else:
-        result = merged.filter(F.col("_op") != "D").drop("_is_source", "_op")
-
-    # 6. write only touched buckets; splice file map ("_b" rides through the
-    # write as the partition column — never lands in the file schema)
-    new_files = table._write_files(result, snap, prepartitioned=True)
-    touched_set = {str(b) for b in touched}
-    spliced = {b: list(fs) for b, fs in snap.files.items() if b not in touched_set}
-    spliced.update(new_files)
-    new_snap = table._commit(spliced, schema, "merge", properties or {}, parent=snap)
-    # rows per rewritten bucket from parquet footers — no Spark job
-    bucket_counts = table.file_row_counts(new_files)
+    out_dir = os.path.join(table.root, "_merge_tmp", uuid.uuid4().hex)
+    try:
+        files = kernel.write(table, src, touched, out_dir)
+        new_snap, bucket_counts = kernel.splice(table, files, properties or {}, touched)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
     return new_snap, sum(bucket_counts.values()), bucket_counts

@@ -7,18 +7,15 @@ Mirrors the reference's constraint system (Pydantic field + cross-field rules,
 silent-keep-on-error quirk (pandas_ops.py:164-169) is deliberate: bad rows are
 *always* quarantined per-row, per the documented intent.
 
-Physical split (scale rationale):
-- Heavy columns (``content``, ~KB/row) are validated with pure Column
-  expressions — they stay inside whole-stage codegen and never cross the
-  JVM/Python boundary. At 10^10 events, shipping content through Arrow just
-  to length-check it would dominate the epoch.
-- The Arrow-vectorized pandas UDF (north-rule requirement, mirroring the
-  reference's per-field Pydantic validators like the 5-digit-fips shape check
-  models.py:16-26) runs on the *small* ``commit`` field (40 B/row): full
-  vectorized regex validation at ~1/25th the transfer cost.
+Physical plan (scale rationale): every rule is a pure Column expression, so
+validation stays inside whole-stage codegen and no row ever crosses the
+JVM/Python boundary. The reference's per-field Pydantic validators (the
+5-digit-fips shape check, models.py:16-26) become an anchored JVM ``rlike``
+on ``commit``; it replaced an Arrow pandas UDF over that 40-byte field,
+measured ~0.5 s/epoch off the fused apply at 642k-event epochs.
 
 Rule map (reference -> here):
-  V1 fips 5-digit shape        -> commit is 40-char lowercase hex (pandas UDF)
+  V1 fips 5-digit shape        -> commit is 40-char lowercase hex (rlike)
   V2/V4 bounded ints           -> event_seq >= 0
   V3 cross-field               -> op='D' must carry null content;
                                   op in (I,U) must carry non-null content
@@ -30,27 +27,11 @@ Rule map (reference -> here):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 OPS = ("I", "U", "D")
 
 REASON_MAX_LEN = 1000  # reference truncates reasons to 1000 chars (staging.py:140)
-
-
-@pandas_udf(BooleanType())
-def commit_shape_ok(commit: pd.Series) -> pd.Series:
-    """Arrow-batched field validator: commit must be 40-char lowercase hex.
-    The reference's zfill+isdigit fips validator (models.py:16-26)
-    re-expressed as one vectorized regex over the whole batch — never
-    per-row Python. Kept as the engine's canonical Arrow-UDF example (and
-    for callers that validate outside a Spark plan); the hot validation
-    path below uses the equivalent JVM ``rlike`` so the whole split stays
-    inside whole-stage codegen with zero Python round-trips — measured
-    ~0.5 s/epoch off the fused apply at 642k-event epochs."""
-    return commit.fillna("").str.fullmatch(r"[0-9a-f]{40}")
 
 
 def violation_rules(has_content: bool = True) -> list[tuple[str, F.Column]]:
@@ -112,8 +93,7 @@ def validate_events(
 
     The whole split is one pass: a ``violations`` array column built from
     when() expressions, filtered two ways. Catalyst computes the array once
-    per row inside codegen; the single Arrow UDF ships only the 40-byte
-    commit column to Python.
+    per row inside codegen; no column is shipped to Python.
     """
     tagged = tag_events(events)
     valid = tagged.filter(F.size("_violations") == 0).drop("_violations")

@@ -25,14 +25,20 @@ def fixture_df(
     spark: SparkSession,
     rows: list[tuple],
     schema: str | StructType,
-    n_partitions: int = 1,
+    n_partitions: int | None = 1,
 ) -> DataFrame:
     """Build a tiny literal DataFrame whose execution never enters Python.
 
     ``n_partitions`` defaults to 1: fixture-sized inputs should cost one
     task (and, for mapInPandas consumers, one python worker), not
     defaultParallelism near-empty ones. Pass a larger value only when the
-    per-row python work downstream is heavy enough to want parallelism.
+    per-row python work downstream is heavy enough to want parallelism;
+    None keeps the relation's own partitioning.
+
+    Raises ``ValueError`` on a duplicate column name (the pandas staging
+    frame is keyed by name, so one column's values would silently replace
+    the other's) and when Arrow transfer is disabled (the session would
+    fall back to the pickled-rows path this helper exists to avoid).
     """
     if isinstance(schema, StructType):
         names = schema.fieldNames()
@@ -40,6 +46,12 @@ def fixture_df(
         from pyspark.sql.types import _parse_datatype_string
 
         names = _parse_datatype_string(schema).fieldNames()
+    dup = sorted({n for n in names if names.count(n) > 1})
+    if dup:
+        raise ValueError(f"fixture_df: duplicate column names {dup}")
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    if spark.conf.get(arrow).lower() != "true":
+        raise ValueError(f"fixture_df needs {arrow}=true (it is off in this session)")
     data = {
         name: pd.Series([r[i] for r in rows], dtype=object)
         for i, name in enumerate(names)

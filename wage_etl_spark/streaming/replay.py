@@ -32,9 +32,9 @@ from wage_etl_spark.lake.manifest import (
     commit_epoch, commit_epochs, create_manifest, epoch_status,
     last_committed_epoch, next_run_id,
 )
-from wage_etl_spark.lake.table import LakeTable, bucket_expr
+from wage_etl_spark.lake.table import LakeTable
 from wage_etl_spark.operators.dedup_lww import dedup_lww
-from wage_etl_spark.operators.merge import align_columns, lww_keep, reentry_op, with_tombstones
+from wage_etl_spark.operators.merge import LWWKernel, align_columns, shuffle_mult
 # not called here: perfbench/layers.py:install wraps this module-level name
 from wage_etl_spark.operators.merge import merge_apply  # noqa: F401
 
@@ -184,9 +184,7 @@ def _plan_pieces(
     are unresolved expression trees bound to names, not to a DataFrame, so
     reuse across epochs is sound."""
     from wage_etl_spark.operators.validate import REASON_MAX_LEN, violation_rules
-    from wage_etl_spark.plans.partitioning import exact_partition_column
 
-    key_cols = snap.key_cols
     P: dict = {}
     has_content = "content" in events.columns
     P["violations"] = F.array_compact(
@@ -254,44 +252,16 @@ def _plan_pieces(
 
     P["ev_cols"] = ev_cols
 
-    # target side: current state re-enters the LWW resolution as is_source=0
-    t_names = snap.schema.fieldNames()
-    P["t_cols"] = [
-        F.lit("stage").alias("_route"),
-        *align_columns(align_schema, t_names),
-        *[F.lit(None).cast("string").alias(c) for c in ("raw_data", "rejection_reason")],
-        F.lit(None).cast("timestamp").alias("reject_timestamp"),
-        F.lit(None).cast("long").alias("_qid"),
-        F.lit(0).alias("_is_source"),
-        reentry_op(t_names).alias("_op"),
-    ]
     # align events side to the evolved schema column order
     ev_names = {"_route", *stage_payload_cols, "content_sha256", "epoch", "run_id",
                 "load_timestamp", *DLQ_EXTRAS, "_qid", "_is_source", "_op"}
     P["ev_align_cols"] = [
         "_route", *align_columns(align_schema, ev_names), *DLQ_EXTRAS, "_qid", "_is_source", "_op",
     ]
-
-    # THE shuffle: one collision-free bucket repartition; winners via the
-    # bucket-local lww_keep sort (the tie order merge_apply uses), grouped
-    # by (key, _qid) so quarantined rows all survive
-    P["bucket_col"] = bucket_expr(key_cols, snap.num_buckets)
-    if mult > 1:
-        P["salt_col"] = F.pmod(
-            F.xxhash64(*[F.col(c) for c in key_cols], F.lit(0x5417)), F.lit(mult)
-        ).cast("int")
-
-    def pt_of(slot, n_slots: int):
-        """Reducer token of a row whose bucket has reducer slot ``slot`` in
-        [0, n_slots), sub-split ``mult`` ways by the salt."""
-        combo = slot * mult + F.col("_salt") if mult > 1 else slot
-        return exact_partition_column(combo, n_slots * mult)
-
-    P["pt_of"] = pt_of
-    P["pt_col"] = pt_of(F.col("_b"), snap.num_buckets)
-    P["keep_col"] = lww_keep(align_schema.fieldNames(), key_cols, ORDERING_COLS, ["_qid"])
-    P["schema"] = with_tombstones(align_schema) if cfg.keep_tombstones else align_schema
-    P["tombstone_col"] = F.when(F.col("_route") == "stage", F.col("_op") == "D")
+    # THE shuffle: the LWW kernel merge_apply runs too; winners are grouped
+    # by (key, _qid), so quarantined rows all survive, and the target side
+    # re-enters with null DLQ columns
+    P["kernel"] = LWWKernel(snap, align_schema, ORDERING_COLS, mult, cfg.keep_tombstones)
     return P
 
 
@@ -314,21 +284,16 @@ def apply_epoch(
     ``events_in``: caller-known row count of ``events`` (e.g. from the epoch
     source's parquet footers); otherwise it is counted.
 
-    Unions the target state with the epoch's tagged events (quarantined rows
-    under a unique synthetic key), repartitions ONCE on the bucket id,
-    resolves LWW winners with the bucket-local ``lww_keep`` sort and writes a
-    single output partitioned by (route, bucket): the DLQ adopts its files,
-    the target adopts the stage files as a copy-on-write state replacement
-    (``overwrite_with_files``). Old files stay on disk, so rollback and
-    resume follow the snapshot/manifest exactly-once protocol.
+    Runs the LWW kernel (``operators.merge.LWWKernel``) over the epoch's
+    tagged events, quarantined rows riding the ``dlq`` route under a unique
+    synthetic key: the DLQ adopts its files, the target splices in the
+    stage files. Old files stay on disk, so rollback and resume follow the
+    snapshot/manifest exactly-once protocol.
 
     ``cfg.dedup_strategy`` picks the plan's shape:
 
-    - ``auto``: one slim aggregate counts the events per bucket first. Its
-      keys are the touched set — only those buckets' target files are read
-      and rewritten, every other bucket's files carry over, and the shuffle
-      has one reducer per touched bucket — and its sum is ``events_in`` when
-      the caller does not know it.
+    - ``auto``: pruned to the touched buckets; the kernel's per-bucket count
+      also gives ``events_in`` when the caller does not know it.
     - ``shuffle``: ``auto`` plus an argmax pre-collapse (``dedup_lww``) of
       the narrow tagged events before any derived column is built; the
       bucket count still reads the raw events.
@@ -363,13 +328,7 @@ def apply_epoch(
 
     snap = target.snapshot()
 
-    # shuffle width: sub-split each bucket into key-pure salt partitions so
-    # the single stage fills the session's cores instead of being capped at
-    # num_buckets tasks — the salt is a hash OF THE KEY (decorrelated from
-    # the bucket hash by a constant), so every key's rows still land in
-    # exactly one partition and the bucket-local LWW sort stays correct; the
-    # write stays bucket-pure with mult files per bucket.
-    mult = max(1, min(8, spark.sparkContext.defaultParallelism // snap.num_buckets))
+    mult = shuffle_mult(spark, snap.num_buckets)
 
     # Plan-piece cache (see _plan_pieces): every expression below depends
     # only on this key, so a multi-epoch replay pays the Py4J-heavy Column
@@ -388,7 +347,7 @@ def apply_epoch(
         cfg.extra["_plan"] = _plan_pieces(cfg, target, events, snap, mult)
         cfg.extra["_plan_key"] = cache_key
     P = cfg.extra["_plan"]
-    schema = P["schema"]
+    kernel = P["kernel"]
 
     tagged = events.withColumn("_violations", P["violations"])
     if chunk is not None and events_in_by_epoch is None:
@@ -408,10 +367,10 @@ def apply_epoch(
     ev_side = ev_side_of(tagged)
     touched = None
     if cfg.dedup_strategy != "fused":
-        per_bucket = ev_side.groupBy(P["bucket_col"]).count().collect()
-        touched = {int(b) for b, _ in per_bucket}
+        per_bucket = kernel.bucket_counts(ev_side)
+        touched = set(per_bucket)
         if events_in is None:
-            events_in = sum(int(n) for _, n in per_bucket)
+            events_in = sum(per_bucket.values())
     if events_in is None:
         events_in = (
             sum(events_in_by_epoch.values()) if chunk is not None else events.count()
@@ -421,60 +380,13 @@ def apply_epoch(
         # to_json run: quarantined rows get a unique _qid and pass through
         keyed = tagged.select("*", P["qid"])
         ev_side = ev_side_of(dedup_lww(keyed, [*snap.key_cols, "_qid"], ORDERING_COLS))
-    t_side = target.read(buckets=touched).select(*P["t_cols"])
-    unioned = t_side.unionByName(ev_side)
-
-    # THE shuffle: one collision-free bucket repartition (combo i -> reducer
-    # i exactly, plans/partitioning.py — a raw repartition on the combo hash
-    # leaves ~1/e of the reducers empty); winners via the bucket-local
-    # lww_keep sort. The window partitions by the token (a bijection of the
-    # combo), so no second exchange is added.
-    bucketed = unioned.withColumn("_b", P["bucket_col"])
-    if mult > 1:
-        bucketed = bucketed.withColumn("_salt", P["salt_col"])
-    n_slots, pt_col = snap.num_buckets, P["pt_col"]
-    if touched:
-        # reducers for the touched buckets only (slot = rank in the touched
-        # set): an untouched bucket's reducer would just run an empty task
-        ranks = sorted(touched)
-        n_slots = len(ranks)
-        slot = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b")).cast("int") - 1
-        pt_col = P["pt_of"](slot, n_slots)
-    bucketed = bucketed.withColumn("_pt", pt_col).repartition(n_slots * mult, "_pt")
-    merged = (
-        bucketed.withColumn("_keep", P["keep_col"])
-        .filter(F.col("_keep"))
-        .drop("_keep")
-    )
-    if cfg.keep_tombstones:
-        merged = merged.withColumn("is_deleted", P["tombstone_col"])
-    else:
-        merged = merged.filter((F.col("_route") == "dlq") | (F.col("_op") != "D"))
-    result = merged.drop("_qid", "_is_source", "_op", "_salt", "_pt")
-
     epoch_tmp = os.path.join(cfg.warehouse, "_epoch_tmp", _uuid.uuid4().hex)
     try:
         _mark("plan")
-        if touched != set():  # an empty pruned epoch has nothing to write
-            result.write.mode("overwrite").partitionBy("_route", "_b").parquet(epoch_tmp)
+        files = kernel.write(target, ev_side, touched, epoch_tmp)
         _mark("write")
 
-        def _bucket_files(route: str) -> dict[str, list[str]]:
-            rdir = os.path.join(epoch_tmp, f"_route={route}")
-            out: dict[str, list[str]] = {}
-            if os.path.isdir(rdir):
-                for bdir in sorted(os.listdir(rdir)):
-                    if not bdir.startswith("_b="):
-                        continue
-                    b = str(int(bdir.split("=")[1]))
-                    out[b] = [
-                        os.path.join(rdir, bdir, f)
-                        for f in sorted(os.listdir(os.path.join(rdir, bdir)))
-                        if f.endswith(".parquet")
-                    ]
-            return out
-
-        dlq_files = [p for fs in _bucket_files("dlq").values() for p in fs]
+        dlq_files = [p for fs in files.get("dlq", {}).values() for p in fs]
         # quarantine count from the DLQ files' parquet footers (no job)
         import pyarrow.parquet as _pq
 
@@ -503,15 +415,7 @@ def apply_epoch(
             )
         _mark("dlq")
 
-        stage_by_bucket = _bucket_files("stage")
-        new_snap = target.overwrite_with_files(
-            stage_by_bucket, schema=schema, properties={"epoch": str(epoch)},
-            touched=touched,
-        )
-        # rows per rewritten bucket (every bucket when unpruned)
-        bucket_counts = target.file_row_counts(
-            {b: fs for b, fs in new_snap.files.items() if touched is None or int(b) in touched}
-        )
+        new_snap, bucket_counts = kernel.splice(target, files, {"epoch": str(epoch)}, touched)
         rows_written = sum(bucket_counts.values())
         _mark("adopt")
     finally:

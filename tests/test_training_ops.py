@@ -279,3 +279,21 @@ def test_dedup_clusters_chain_and_singleton(spark):
         for r in dedup_clusters(pairs, nodes=nodes).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 99: 99}
+
+
+def test_dedup_clusters_long_chain_plan_stays_bounded(spark):
+    """A 64-node chain needs ~6 pointer-jumping rounds. Each round references
+    the prior labels four times, so without a per-round lineage cut the
+    plan grows 4x a round and the driver runs out of heap; the returned
+    plan must be one checkpoint leaf whatever the round count."""
+    from wage_etl_spark.operators import dedupe
+
+    n = 64
+    # scrambled edge order and direction so no single pass sweeps the chain
+    edges = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(n - 1)]
+    edges = edges[::3] + edges[1::3] + edges[2::3]
+    out = dedupe.dedup_clusters(spark.createDataFrame(edges, "id_a long, id_b long"))
+    assert dedupe.LAST_RUN_STATS["dedup_clusters"]["rounds"] >= 4
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.count("LogicalRDD") == 1, plan
+    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {i: 0 for i in range(n)}

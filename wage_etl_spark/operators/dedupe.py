@@ -342,12 +342,16 @@ def dedup_clusters(
     Scale shape: every round is two equi-joins + a min-aggregate over
     (id, label) pairs — ~16 B/row, document text never enters the loop; the
     edge list is shuffled once per round on small integer keys. Each round
-    runs exactly ONE Spark action: the round result is persisted and the
-    convergence check is a single slim aggregate over it, which both
-    materializes the cache and returns the changed-row count (the previous
-    round's cache is released immediately after). Execution plans stay
-    bounded because each round reads the prior round's InMemoryRelation,
-    not its recomputed lineage. Raises ``RuntimeError`` if ``max_iter``
+    runs exactly ONE Spark action: the round result is lazily
+    local-checkpointed and the convergence check is a single slim aggregate
+    over it, which both materializes the checkpoint and returns the
+    changed-row count. Plans stay bounded because each round starts from
+    the prior round's checkpoint leaf: a round references the prior labels
+    four times, so a persist alone (which keeps the logical lineage) grows
+    the plan 4x per round and exhausts the driver heap on a long chain
+    within ~5 rounds. A lost executor loses its checkpoint blocks and the
+    next round fails with a missing-block error rather than recomputing.
+    Raises ``RuntimeError`` if ``max_iter``
     rounds elapse without convergence — silent wrong labels are never
     returned. Returns a deterministic assignment (min is
     order-independent)."""
@@ -383,10 +387,7 @@ def dedup_clusters(
             F.least(F.col("id"), F.coalesce(F.col("_nb"), F.col("id"))).alias("label"),
         )
     )
-    from pyspark import StorageLevel
-
-    labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    prev_cache: DataFrame | None = labels
+    labels = labels.localCheckpoint(eager=False)
     converged = False
     rounds = 0
     for _ in range(max_iter):
@@ -412,18 +413,15 @@ def dedup_clusters(
             .select(
                 "id", "_old", F.least(F.col("_l1"), F.col("_llabel")).alias("label")
             )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # ONE action: the aggregate scan populates the cache AND returns the
-        # changed count — no separate materialization job per round.
+        ).localCheckpoint(eager=False)
+        # ONE action: the aggregate scan populates the checkpoint AND returns
+        # the changed count — no separate materialization job per round.
         changed = (
             jumped.agg(
                 F.sum((F.col("label") != F.col("_old")).cast("long")).alias("c")
             ).first()["c"]
             or 0
         )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = jumped
         labels = jumped.drop("_old")
         if changed == 0:
             converged = True
@@ -434,9 +432,6 @@ def dedup_clusters(
             "labels would be incorrect — raise max_iter (rounds grow "
             "O(log component diameter))"
         )
-    from wage_etl_spark.operators.caching import register_cache
-
-    register_cache(prev_cache)
     LAST_RUN_STATS["dedup_clusters"] = {"rounds": rounds}
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 

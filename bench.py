@@ -250,9 +250,7 @@ def run_multi_epoch(spark, n_events: int) -> dict:
         n_jobs = len(c_first) + len(c_second)
         target2, _dlq2, manifest2 = open_tables(spark, cfg2_rest)
         report2 = verify_state(spark, target2, reference_state(src._df))
-        epochs_committed = sum(
-            len(r.get("epochs", [0])) for r in c_first + c_second
-        )
+        epochs_committed = sum(len(r["epochs"]) for r in c_first + c_second)
         out["catchup"] = {
             "chunk_epochs": 4,
             "fused_jobs": n_jobs,

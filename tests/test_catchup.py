@@ -10,6 +10,7 @@ the union of a..b's events yield the same winners."""
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import json
 import os
@@ -102,7 +103,7 @@ def test_chunk_resume_and_partial_tail(spark, tmp_path):
         src,
     )
     # 3 pending epochs -> one chunk of 2 + one single (partial tail)
-    assert [r.get("epochs", [r["epoch"]]) for r in first] == [[0, 1], [2]]
+    assert [r["epochs"] for r in first] == [[0, 1], [2]]
     second = replay(
         spark,
         ReplayConfig(
@@ -110,7 +111,7 @@ def test_chunk_resume_and_partial_tail(spark, tmp_path):
         ),
         src,
     )
-    assert [r.get("epochs", [r["epoch"]]) for r in second] == [[3, 4], [5]]
+    assert [r["epochs"] for r in second] == [[3, 4], [5]]
     cfg = ReplayConfig(warehouse=wh, num_buckets=8)
     target, _dlq, manifest = open_tables(spark, cfg)
     assert last_committed_epoch(manifest) == 5
@@ -168,7 +169,7 @@ def test_chunk_crash_is_atomic(spark, tmp_path):
     cfg = ReplayConfig(
         warehouse=wh, num_buckets=4, dedup_strategy="fused", catch_up_epochs=2
     )
-    replay(spark, ReplayConfig(**{**cfg.__dict__, "max_epochs": 2}), src)
+    replay(spark, dataclasses.replace(cfg, max_epochs=2), src)
 
     # run the second chunk, then erase its manifest append (simulated torn
     # chunk: target + dlq committed, manifest not)
@@ -183,7 +184,7 @@ def test_chunk_crash_is_atomic(spark, tmp_path):
     target, _dlq, manifest = open_tables(spark, cfg)
     assert last_committed_epoch(manifest) == 1  # chunk [2,3] uncommitted
     res = replay(spark, cfg, src)  # rolls back orphans, re-runs chunk [2,3]
-    assert [r.get("epochs") for r in res] == [[2, 3]]
+    assert [r["epochs"] for r in res] == [[2, 3]]
     target, _dlq, manifest = open_tables(spark, cfg)
     assert last_committed_epoch(manifest) == 3
     assert verify_state(spark, target, reference_state(ev))["equal"]
@@ -194,4 +195,31 @@ def test_chunk_crash_is_atomic(spark, tmp_path):
         for p in sorted(glob.glob(os.path.join(tmeta, "snap-*.json")))
     ]
     assert "rollback" in ops
+    ev.unpersist()
+
+
+def test_auto_chunk_counts_in_the_bucket_count(spark, tmp_path):
+    """Without footer counts (an in-memory source), a 4-epoch ``auto`` chunk
+    takes its per-epoch ``events_in`` from the (bucket, epoch) count that
+    also gives the touched set: no separate per-epoch count job."""
+    ev = synthesize_events(
+        spark, n_events=1200, n_keys=40, n_epochs=5, invalid_frac=0.05
+    )
+    ev.cache().count()
+    src = EpochSource(ev)
+    cfg = ReplayConfig(warehouse=str(tmp_path / "wh"), num_buckets=8, catch_up_epochs=4)
+    replay(spark, dataclasses.replace(cfg, max_epochs=1), src)
+
+    jsc = spark.sparkContext._jsc.sc()
+    j0 = int(jsc.dagScheduler().nextJobId())
+    res = replay(spark, cfg, src)
+    assert int(jsc.dagScheduler().nextJobId()) - j0 <= 4
+    assert [r["epochs"] for r in res] == [[1, 2, 3, 4]]
+    expected = {
+        int(r["epoch"]): int(r["count"])
+        for r in ev.filter("epoch >= 1").groupBy("epoch").count().collect()
+    }
+    assert {m["epoch"]: m["events_in"] for m in res[0]["per_epoch"]} == expected
+    target, _dlq, _manifest = open_tables(spark, cfg)
+    assert verify_state(spark, target, reference_state(ev))["equal"]
     ev.unpersist()

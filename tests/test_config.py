@@ -46,6 +46,15 @@ def test_unknown_dedup_strategy_rejected():
         cfg.replay_config()
 
 
+@pytest.mark.parametrize("n", [0, -1])
+def test_catch_up_epochs_below_one_rejected(n):
+    """A non-positive chunk size fails loudly instead of running as 1."""
+    from wage_etl_spark.streaming.replay import ReplayConfig
+
+    with pytest.raises(ValueError, match="catch_up_epochs must be >= 1"):
+        ReplayConfig(warehouse="/lake/wh", catch_up_epochs=n)
+
+
 def test_unknown_key_rejected(tmp_path):
     f = tmp_path / "cfg.yaml"
     f.write_text("not_a_key: 1\n")

@@ -3,6 +3,8 @@ manifest counters, DLQ contents, status rules (the BASELINE.json invariant)."""
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import functions as F
 
 from wage_etl_spark.lake.manifest import last_committed_epoch
@@ -434,7 +436,7 @@ def test_sparse_shuffle_epoch_precollapses_in_pruned_plan(spark, warehouse, monk
     assert ev.filter(hot).count() >= 8
     src = EpochSource(ev)
     cfg = ReplayConfig(warehouse=warehouse, num_buckets=32, dedup_strategy="shuffle")
-    replay(spark, ReplayConfig(**{**cfg.__dict__, "max_epochs": 1}), src)
+    replay(spark, dataclasses.replace(cfg, max_epochs=1), src)
     target, dlq, manifest = open_tables(spark, cfg)
     before = target.snapshot()
 

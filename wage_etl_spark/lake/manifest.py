@@ -65,59 +65,6 @@ def epoch_status(events_in: int, rows_valid: int, quarantined: int) -> str:
 def commit_epoch(
     manifest: LakeTable,
     *,
-    epoch: int,
-    run_id: int,
-    status: str,
-    events_in: int,
-    rows_merged: int,
-    rows_quarantined: int,
-    rows_loaded: int | None = None,
-    snapshot_id: int,
-    start_ts,
-    end_ts,
-    partition_counts: dict[int, int] | None = None,
-    error_message: str | None = None,
-):
-    """Append the epoch summary row + per-partition (bucket) lineage rows.
-    This is the LAST write of an epoch — its presence is the commit point.
-    Written driver-side (pyarrow): a manifest append must never cost a
-    cluster job.
-
-    Two row counts are recorded (the reference's wages_loaded tracks only
-    epoch-sourced rows): ``rows_loaded`` = the epoch's valid
-    (non-quarantined) events, every one of which entered the LWW
-    resolution, ``rows_merged`` = total rows in every rewritten bucket
-    (carried-over rows included — the copy-on-write write amplification)."""
-    rows = [
-        dict(
-            epoch=epoch, partition_id=None, status=status, events_in=events_in,
-            rows_merged=rows_merged, rows_loaded=rows_loaded,
-            rows_quarantined=rows_quarantined, run_id=run_id,
-            snapshot_id=snapshot_id, start_ts=start_ts, end_ts=end_ts,
-            error_message=error_message,
-        )
-    ]
-    for pid, cnt in sorted((partition_counts or {}).items()):
-        rows.append(
-            dict(
-                epoch=epoch, partition_id=int(pid), status=status, events_in=None,
-                rows_merged=int(cnt), rows_loaded=None, rows_quarantined=None, run_id=run_id,
-                snapshot_id=snapshot_id, start_ts=start_ts, end_ts=end_ts,
-                error_message=None,
-            )
-        )
-    # epoch + run_id ride on the snapshot properties so resume reads them in
-    # O(1) (one JSON) instead of scanning every manifest data file — at the
-    # 10^5-epoch design scale the scan is a real resume cost, and the
-    # streaming front-end checks the last epoch on EVERY micro-batch
-    return manifest.append_local(
-        rows, properties={"epoch": str(epoch), "run_id": str(run_id)}
-    )
-
-
-def commit_epochs(
-    manifest: LakeTable,
-    *,
     per_epoch: list[dict],
     run_id: int,
     snapshot_id: int,
@@ -125,36 +72,46 @@ def commit_epochs(
     end_ts,
     partition_counts: dict[int, int] | None = None,
 ):
-    """Atomically commit a CHUNK of coalesced epochs (catch-up mode): one
-    summary row per epoch — each with its own status/events_in/quarantined —
-    all sharing the chunk's snapshot_id, plus per-bucket lineage rows on the
-    last epoch. ONE append is the commit point for the whole chunk, so a
-    crash mid-chunk leaves no epoch committed and resume re-runs the chunk.
+    """Append one summary row per applied epoch + per-partition (bucket)
+    lineage rows on the last epoch. This is the LAST write of an apply — its
+    presence is the commit point, for every epoch of a catch-up range at
+    once: a crash before it leaves none of them committed, and resume
+    re-runs the range. Written driver-side (pyarrow): a manifest append must
+    never cost a cluster job.
 
     ``per_epoch``: [{epoch, status, events_in, rows_merged, rows_loaded,
-    rows_quarantined}] in epoch order."""
+    rows_quarantined}] in epoch order; all rows share ``snapshot_id``. Two
+    row counts are recorded (the reference's wages_loaded tracks only
+    epoch-sourced rows): ``rows_loaded`` = the epoch's valid
+    (non-quarantined) events, every one of which entered the LWW
+    resolution, ``rows_merged`` = total rows in every rewritten bucket
+    (carried-over rows included — the copy-on-write write amplification),
+    set on the last epoch only. ``error_message`` is left null."""
+    last = per_epoch[-1]
+    shared = dict(run_id=run_id, snapshot_id=snapshot_id, start_ts=start_ts, end_ts=end_ts)
     rows = [
         dict(
             epoch=int(m["epoch"]), partition_id=None, status=m["status"],
             events_in=m["events_in"], rows_merged=m["rows_merged"],
             rows_loaded=m["rows_loaded"], rows_quarantined=m["rows_quarantined"],
-            run_id=run_id, snapshot_id=snapshot_id, start_ts=start_ts,
-            end_ts=end_ts, error_message=None,
+            **shared,
         )
         for m in per_epoch
     ]
-    last = int(per_epoch[-1]["epoch"])
     for pid, cnt in sorted((partition_counts or {}).items()):
         rows.append(
             dict(
-                epoch=last, partition_id=int(pid), status=per_epoch[-1]["status"],
+                epoch=int(last["epoch"]), partition_id=int(pid), status=last["status"],
                 events_in=None, rows_merged=int(cnt), rows_loaded=None,
-                rows_quarantined=None, run_id=run_id, snapshot_id=snapshot_id,
-                start_ts=start_ts, end_ts=end_ts, error_message=None,
+                rows_quarantined=None, **shared,
             )
         )
+    # epoch + run_id ride on the snapshot properties so resume reads them in
+    # O(1) (one JSON) instead of scanning every manifest data file — at the
+    # 10^5-epoch design scale the scan is a real resume cost, and the
+    # streaming front-end checks the last epoch on EVERY micro-batch
     return manifest.append_local(
-        rows, properties={"epoch": str(last), "run_id": str(run_id)}
+        rows, properties={"epoch": str(last["epoch"]), "run_id": str(run_id)}
     )
 
 

@@ -47,7 +47,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 HINT_FILE = "version-hint.text"
@@ -149,6 +149,19 @@ def bucket_files(path: str) -> dict[str, list[str]]:
                 os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")
             ]
     return out
+
+
+def align_columns(schema: StructType, present) -> list[Column]:
+    """``schema``'s columns in its order: a name in ``present`` cast to its
+    evolved type (type-widened columns read narrow from old files; a no-op
+    when the types match), any other name a typed null."""
+    return [
+        (
+            F.col(f.name).cast(f.dataType) if f.name in present
+            else F.lit(None).cast(f.dataType)
+        ).alias(f.name)
+        for f in schema.fields
+    ]
 
 
 def to_physical(df: DataFrame, renames: dict[str, str]) -> DataFrame:
@@ -369,17 +382,7 @@ class LakeTable:
         new_fields = [f for f in df.schema.fields if f.name not in cur_names]
         evolved = evolved or len(new_fields) > 0
         schema = StructType(fields + [type(f)(f.name, f.dataType, True) for f in new_fields])
-        aligned = df.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in df.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        return schema, aligned, evolved
+        return schema, df.select(*align_columns(schema, df.columns)), evolved
 
     def append(self, df: DataFrame, properties: dict[str, str] | None = None) -> Snapshot:
         snap = self.snapshot()

@@ -49,6 +49,3 @@ def setup_logging(level: str = "INFO", log_file: str | None = None) -> logging.L
         root.addHandler(fh)
     return root
 
-
-def get_logger(name: str) -> logging.Logger:
-    return logging.getLogger(f"wage_etl_spark.{name}")

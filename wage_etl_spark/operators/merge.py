@@ -47,22 +47,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from wage_etl_spark.lake.table import (
-    LakeTable, Snapshot, bucket_expr, bucket_files, to_physical,
+    LakeTable, Snapshot, align_columns, bucket_expr, bucket_files, to_physical,
 )
 from wage_etl_spark.plans.partitioning import exact_partition_column
-
-
-def align_columns(schema: StructType, present) -> list[Column]:
-    """``schema``'s columns in its order: a name in ``present`` cast to its
-    evolved type (type-widened columns read narrow from old files; a no-op
-    when the types match), any other name a typed null."""
-    return [
-        (
-            F.col(f.name).cast(f.dataType) if f.name in present
-            else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
-        for f in schema.fields
-    ]
 
 
 def lww_keep(columns, key_cols: list[str], ordering_cols: list[str], group_extra=()) -> Column:
@@ -146,9 +133,13 @@ class LWWKernel:
         combo = slot * self.mult + F.col("_salt") if self.mult > 1 else slot
         return exact_partition_column(combo, n_slots * self.mult)
 
-    def bucket_counts(self, source: DataFrame) -> dict[int, int]:
-        """Step 1: source rows per bucket — its keys are the touched set."""
-        return {int(b): int(n) for b, n in source.groupBy(self.bucket_col).count().collect()}
+    def bucket_counts(self, source: DataFrame, *by: str) -> dict[tuple, int]:
+        """Step 1: source rows per (bucket, *``by``) — the buckets are the
+        touched set."""
+        return {
+            tuple(int(v) for v in r[:-1]): int(r[-1])
+            for r in source.groupBy(self.bucket_col, *by).count().collect()
+        }
 
     def write(
         self, table: LakeTable, source: DataFrame, touched: set[int] | None, out_dir: str,
@@ -251,7 +242,7 @@ def merge_apply(
         F.lit(1).alias("_is_source"),
         src_op.alias("_op"),
     )
-    touched = set(kernel.bucket_counts(src))
+    touched = {b for b, in kernel.bucket_counts(src)}
     if not touched:
         return (
             table._commit(snap.files, snap.schema, "merge-noop", properties or {}, parent=snap),

@@ -13,10 +13,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 
-def _physical(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _pre_aqe(df: DataFrame) -> str:
     return df._jdf.queryExecution().sparkPlan().toString()
 

@@ -83,20 +83,17 @@ class EpochSource:
         return self._dead_by_epoch.get(e, [])
 
     def epoch(self, e: int) -> DataFrame:
-        """Events of epoch ``e``; partition-pruned when the backing parquet is
-        written ``partitionBy("epoch")`` (the filter reaches the scan)."""
-        df = self._df.filter(F.col("epoch") == e)
-        dead = self._dead_columns(e)
-        if dead:
-            df = df.drop(*dead)
-        return df
+        """Events of epoch ``e``."""
+        return self.epochs(e, e)
 
     def epochs(self, a: int, b: int) -> DataFrame:
-        """Events of epochs ``a..b`` inclusive, one partition-pruned scan —
-        the catch-up unit (ReplayConfig.catch_up_epochs). A column is dropped
-        only if it is dead in EVERY epoch of the range (a column introduced
-        mid-range stays, null before its first epoch — the same rows a
-        per-epoch replay produces after schema merge)."""
+        """Events of epochs ``a..b`` inclusive, one scan, partition-pruned
+        when the backing parquet is written ``partitionBy("epoch")`` (the
+        filter reaches the scan) — the unit of one apply
+        (ReplayConfig.catch_up_epochs). A column is dropped only if it is
+        dead in EVERY epoch of the range (a column introduced mid-range
+        stays, null before its first epoch — the same rows a per-epoch
+        replay produces after schema merge)."""
         df = self._df.filter((F.col("epoch") >= a) & (F.col("epoch") <= b))
         dead = set(self._dead_columns(a))
         for e in range(a + 1, b + 1):

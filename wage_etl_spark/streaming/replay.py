@@ -29,12 +29,12 @@ from pyspark.sql.types import (
 )
 
 from wage_etl_spark.lake.manifest import (
-    commit_epoch, commit_epochs, create_manifest, epoch_status,
+    commit_epoch, create_manifest, epoch_status,
     last_committed_epoch, next_run_id,
 )
-from wage_etl_spark.lake.table import LakeTable
+from wage_etl_spark.lake.table import LakeTable, align_columns
 from wage_etl_spark.operators.dedup_lww import dedup_lww
-from wage_etl_spark.operators.merge import LWWKernel, align_columns, shuffle_mult
+from wage_etl_spark.operators.merge import LWWKernel, shuffle_mult
 # not called here: perfbench/layers.py:install wraps this module-level name
 from wage_etl_spark.operators.merge import merge_apply  # noqa: F401
 
@@ -103,27 +103,33 @@ class ReplayConfig:
     # between the manifest commit and the rebucket re-triggers it on resume
     # even if later epochs never rewrite the oversized bucket.
     rebucket_above_rows: int | None = None
-    # catch-up coalescing: when the replay is more than one epoch behind,
-    # apply up to this many consecutive pending epochs in ONE apply (the
-    # plan dedup_strategy selects). Sound because the apply is monotone
-    # max-version LWW — iterating it over epochs a..b equals one global
-    # argmax over state ∪ all of a..b's events, and so do the pruning and
-    # the pre-collapse — so the chunk produces the byte-identical final
-    # state; per-epoch events_in/quarantined metrics are still recorded
-    # (source footers + a column-only read of the chunk's DLQ output). The
-    # whole chunk commits atomically (one manifest append), so the
-    # durability/resume granularity while catching up is the chunk, not the
-    # epoch — live tailing (never behind) is unaffected. This is the scale
-    # answer to the fixed ~0.5-1 s/job floor: a 10^4-epoch backlog is
-    # 10^4/k jobs, not 10^4.
+    # catch-up coalescing: every apply is a range of epochs since..epoch (a
+    # single epoch is the range of one); when the replay is more than one
+    # epoch behind, up to this many consecutive pending epochs go into ONE
+    # apply (the plan dedup_strategy selects). Must be >= 1. Sound because
+    # the apply is monotone max-version LWW — iterating it over epochs a..b
+    # equals one global argmax over state ∪ all of a..b's events, and so do
+    # the pruning and the pre-collapse — so the range produces the
+    # byte-identical final state; per-epoch events_in/quarantined metrics
+    # are still recorded (source footers or the count job, plus a
+    # column-only read of the apply's DLQ output). The whole range commits
+    # atomically (one manifest append), so the durability/resume
+    # granularity while catching up is the range, not the epoch — live
+    # tailing (never behind) is unaffected. This is the scale answer to the
+    # fixed ~0.5-1 s/job floor: a 10^4-epoch backlog is 10^4/k jobs, not
+    # 10^4.
     catch_up_epochs: int = 1
-    extra: dict = field(default_factory=dict)
+    # apply_epoch's plan cache, (key, pieces); it lives on the config so a
+    # config reused across replay() calls builds the plan once
+    _plan: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def __post_init__(self):
         if self.dedup_strategy not in ("auto", "fused", "shuffle"):
             raise ValueError(
                 f"unknown dedup_strategy {self.dedup_strategy!r} (auto, fused or shuffle)"
             )
+        if self.catch_up_epochs < 1:
+            raise ValueError(f"catch_up_epochs must be >= 1, got {self.catch_up_epochs!r}")
 
 
 def open_tables(spark: SparkSession, cfg: ReplayConfig) -> tuple[LakeTable, LakeTable, LakeTable]:
@@ -274,48 +280,54 @@ def apply_epoch(
     events: DataFrame,
     epoch: int,
     run_id: int,
-    events_in: int | None = None,
-    chunk: list[int] | None = None,
-    events_in_by_epoch: dict[int, int] | None = None,
+    events_in: dict[int, int] | None = None,
+    since: int | None = None,
 ) -> dict:
-    """Validate -> route (DLQ | LWW winners) -> MERGE -> manifest, one epoch,
-    in ONE write job.
+    """Validate -> route (DLQ | LWW winners) -> MERGE -> manifest for the
+    epochs ``since..epoch`` (``since`` defaults to ``epoch``: a single epoch
+    is the range of one), in ONE write job.
 
-    ``events_in``: caller-known row count of ``events`` (e.g. from the epoch
-    source's parquet footers); otherwise it is counted.
+    ``events`` are the range's events, each row keeping its own ``epoch``
+    (a micro-batch without the column is all ``epoch``). ``events_in``:
+    caller-known rows per epoch (e.g. from the epoch source's parquet
+    footers); otherwise they are counted.
 
-    Runs the LWW kernel (``operators.merge.LWWKernel``) over the epoch's
-    tagged events, quarantined rows riding the ``dlq`` route under a unique
+    Runs the LWW kernel (``operators.merge.LWWKernel``) over the tagged
+    events, quarantined rows riding the ``dlq`` route under a unique
     synthetic key: the DLQ adopts its files, the target splices in the
     stage files. Old files stay on disk, so rollback and resume follow the
     snapshot/manifest exactly-once protocol.
 
     ``cfg.dedup_strategy`` picks the plan's shape:
 
-    - ``auto``: pruned to the touched buckets; the kernel's per-bucket count
-      also gives ``events_in`` when the caller does not know it.
+    - ``auto``: pruned to the touched buckets; the kernel's count, grouped
+      by (bucket, epoch), also gives ``events_in`` when the caller does not
+      know it.
     - ``shuffle``: ``auto`` plus an argmax pre-collapse (``dedup_lww``) of
       the narrow tagged events before any derived column is built; the
       bucket count still reads the raw events.
-    - ``fused``: unpruned — rewrites the whole table and skips the count.
+    - ``fused``: unpruned — rewrites the whole table and skips the bucket
+      count; unknown ``events_in`` is a plain count of ``events``.
 
-    Counters come from the bucket count or the caller and from parquet
-    footers — no ``Observation`` (``Observation.get`` deadlocks inside a
-    ``foreachBatch`` micro-batch), and nothing is ever read back from the
-    DLQ (which grows with every epoch).
+    Counters come from the count or the caller and from a column-only
+    pyarrow read of the ``epoch`` column of this apply's DLQ files — no
+    ``Observation`` (``Observation.get`` deadlocks inside a ``foreachBatch``
+    micro-batch), and the committed DLQ (which grows with every epoch) is
+    never read back.
 
-    Catch-up chunks: with ``chunk=[a..b]`` the SAME plan applies all of the
-    range's events at once (``events`` = the range scan, rows keeping their
-    own epoch). Equivalence: this apply is monotone max-version LWW, so
-    iterating it per epoch and running it once over the union both yield the
-    per-key global argmax — identical final bytes. Per-epoch metrics come
-    from ``events_in_by_epoch`` (source footers) and a column-only pyarrow
-    read of the chunk's DLQ files; the manifest records every epoch in ONE
-    atomic append (commit_epochs)."""
+    A range runs the SAME plan over all of its events at once. Equivalence:
+    this apply is monotone max-version LWW, so iterating it per epoch and
+    running it once over the union both yield the per-key global argmax —
+    identical final bytes. The manifest records one summary row per epoch
+    in ONE atomic append (``commit_epoch``)."""
     import shutil
     import time as _time
     import uuid as _uuid
 
+    import pyarrow.compute as _pc
+    import pyarrow.parquet as _pq
+
+    epochs = list(range(epoch if since is None else since, epoch + 1))
     _check_no_renames(target)
     start_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     _t0 = _time.monotonic()
@@ -343,22 +355,12 @@ def apply_epoch(
         bool(cfg.keep_tombstones),
         mult,
     )
-    if cfg.extra.get("_plan_key") != cache_key:
-        cfg.extra["_plan"] = _plan_pieces(cfg, target, events, snap, mult)
-        cfg.extra["_plan_key"] = cache_key
-    P = cfg.extra["_plan"]
+    if cfg._plan is None or cfg._plan[0] != cache_key:
+        cfg._plan = (cache_key, _plan_pieces(cfg, target, events, snap, mult))
+    P = cfg._plan[1]
     kernel = P["kernel"]
 
     tagged = events.withColumn("_violations", P["violations"])
-    if chunk is not None and events_in_by_epoch is None:
-        # one slim agg job (epoch column only) when the source can't provide
-        # footer counts for the range
-        events_in_by_epoch = {
-            int(r["epoch"]): int(r["n"])
-            for r in events.groupBy("epoch").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        for e in chunk:
-            events_in_by_epoch.setdefault(e, 0)
 
     def ev_side_of(df: DataFrame) -> DataFrame:
         """Both routes, aligned to the evolved schema column order."""
@@ -367,14 +369,17 @@ def apply_epoch(
     ev_side = ev_side_of(tagged)
     touched = None
     if cfg.dedup_strategy != "fused":
-        per_bucket = kernel.bucket_counts(ev_side)
-        touched = set(per_bucket)
+        per_bucket = kernel.bucket_counts(ev_side, "epoch")
+        touched = {b for b, _ in per_bucket}
         if events_in is None:
-            events_in = sum(per_bucket.values())
-    if events_in is None:
-        events_in = (
-            sum(events_in_by_epoch.values()) if chunk is not None else events.count()
-        )
+            events_in = {}
+            for (_, e), n in per_bucket.items():
+                events_in[e] = events_in.get(e, 0) + n
+    elif events_in is None:
+        if "epoch" in events.columns:
+            events_in = {int(e): int(n) for e, n in events.groupBy("epoch").count().collect()}
+        else:
+            events_in = {epoch: events.count()}
     if cfg.dedup_strategy == "shuffle":
         # argmax pre-collapse on the narrow tagged events, before sha256 /
         # to_json run: quarantined rows get a unique _qid and pass through
@@ -387,25 +392,14 @@ def apply_epoch(
         _mark("write")
 
         dlq_files = [p for fs in files.get("dlq", {}).values() for p in fs]
-        # quarantine count from the DLQ files' parquet footers (no job)
-        import pyarrow.parquet as _pq
-
-        n_quarantined = sum(_pq.ParquetFile(p).metadata.num_rows for p in dlq_files)
-        n_valid = events_in - n_quarantined
-        q_by_epoch: dict[int, int] = {}
-        if chunk is not None:
-            # per-epoch DLQ attribution: a column-only read of the chunk's
-            # DLQ output (8 B x quarantined rows, never the payload)
-            import pyarrow.compute as _pc
-
-            q_by_epoch = {e: 0 for e in chunk}
-            for p in dlq_files:
-                vc = _pc.value_counts(
-                    _pq.read_table(p, columns=["epoch"]).column("epoch")
-                )
-                for item in vc:
-                    e = int(item["values"].as_py())
-                    q_by_epoch[e] = q_by_epoch.get(e, 0) + int(item["counts"].as_py())
+        # per-epoch quarantine counts: a column-only read of this apply's
+        # DLQ output (8 B x quarantined rows, never the payload)
+        quarantined: dict[int, int] = {}
+        for p in dlq_files:
+            col = _pq.ParquetFile(p).read(columns=["epoch"]).column("epoch")
+            for item in _pc.value_counts(col):
+                e = int(item["values"].as_py())
+                quarantined[e] = quarantined.get(e, 0) + int(item["counts"].as_py())
         if dlq_files:
             dlq.adopt_files(dlq_files, properties={"epoch": str(epoch)})
         else:
@@ -422,46 +416,29 @@ def apply_epoch(
         shutil.rmtree(epoch_tmp, ignore_errors=True)
 
     end_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    if chunk is not None:
-        per_epoch = []
-        for e in chunk:
-            ein = int(events_in_by_epoch.get(e, 0))
-            q = int(q_by_epoch.get(e, 0))
-            per_epoch.append(
-                dict(
-                    epoch=e, status=epoch_status(ein, ein - q, q), events_in=ein,
-                    rows_merged=rows_written if e == chunk[-1] else None,
-                    rows_loaded=ein - q, rows_quarantined=q,
-                )
+    per_epoch = []
+    for e in epochs:
+        ein, q = int(events_in.get(e, 0)), int(quarantined.get(e, 0))
+        per_epoch.append(
+            dict(
+                epoch=e, status=epoch_status(ein, ein - q, q), events_in=ein,
+                rows_merged=rows_written if e == epoch else None,
+                rows_loaded=ein - q, rows_quarantined=q,
             )
-        commit_epochs(
-            manifest, per_epoch=per_epoch, run_id=run_id,
-            snapshot_id=new_snap.version, start_ts=start_ts, end_ts=end_ts,
-            partition_counts={int(b): c for b, c in bucket_counts.items()},
         )
-        _mark("manifest")
-        log.debug("epochs %s chunk phases: %s", chunk, _phase)
-        return {
-            "epoch": epoch, "epochs": list(chunk), "per_epoch": per_epoch,
-            "status": per_epoch[-1]["status"], "events_in": events_in,
-            "valid": n_valid, "quarantined": n_quarantined,
-            "rows_written": rows_written, "snapshot": new_snap.version,
-            "max_bucket_rows": max(bucket_counts.values(), default=0),
-            "phases": _phase,
-        }
-    status = epoch_status(events_in, n_valid, n_quarantined)
     commit_epoch(
-        manifest,
-        epoch=epoch, run_id=run_id, status=status, events_in=events_in,
-        rows_merged=rows_written, rows_loaded=n_valid, rows_quarantined=n_quarantined,
+        manifest, per_epoch=per_epoch, run_id=run_id,
         snapshot_id=new_snap.version, start_ts=start_ts, end_ts=end_ts,
         partition_counts={int(b): c for b, c in bucket_counts.items()},
     )
     _mark("manifest")
-    log.debug("epoch %s phases: %s", epoch, _phase)
+    log.debug("epochs %s..%s phases: %s", epochs[0], epoch, _phase)
+    n_in = sum(m["events_in"] for m in per_epoch)
+    n_quarantined = sum(m["rows_quarantined"] for m in per_epoch)
     return {
-        "epoch": epoch, "status": status, "events_in": events_in,
-        "valid": n_valid, "quarantined": n_quarantined,
+        "epoch": epoch, "epochs": epochs, "per_epoch": per_epoch,
+        "status": per_epoch[-1]["status"], "events_in": n_in,
+        "valid": n_in - n_quarantined, "quarantined": n_quarantined,
         "rows_written": rows_written, "snapshot": new_snap.version,
         "max_bucket_rows": max(bucket_counts.values(), default=0),
         "phases": _phase,
@@ -470,8 +447,12 @@ def apply_epoch(
 
 def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
     """Replay all epochs from the source, resuming after the last committed
-    epoch. ``source`` is a sources.events.EpochSource (or anything with
-    ``max_epoch()`` and ``epoch(e)``)."""
+    epoch, up to ``cfg.catch_up_epochs`` of them per ``apply_epoch``.
+    ``source`` is a sources.events.EpochSource (or anything with
+    ``max_epoch()``, ``epochs(a, b)`` and ``epoch_rows(e)``, the last
+    returning None when it does not know the count)."""
+    import time as _time
+
     target, dlq, manifest = open_tables(spark, cfg)
     _check_no_renames(target)
     last = last_committed_epoch(manifest)
@@ -479,67 +460,47 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
     _rollback_orphans(dlq, last)
     run_id = next_run_id(manifest)
 
-    # Start-of-run rebucket check (round-3 ADVICE): the per-epoch trigger
-    # below only sees the buckets the epoch just rewrote, so a crash between
-    # the manifest commit and the rebucket — or an oversized UNTOUCHED bucket
-    # — would otherwise never re-trigger. One driver-side footer read over
-    # the current snapshot (no Spark job) closes both gaps.
+    def maybe_rebucket(max_rows: int, epoch: int) -> int | None:
+        """Rebucket the target to 4x its buckets when a bucket has more
+        than ``cfg.rebucket_above_rows`` rows; the snapshot carries the
+        committed ``epoch``'s tag."""
+        if not cfg.rebucket_above_rows or max_rows <= cfg.rebucket_above_rows:
+            return None
+        nb = target.snapshot().num_buckets * 4
+        log.info(
+            "epoch %s: a bucket has over %s rows — rebucketing to %s",
+            epoch, cfg.rebucket_above_rows, nb,
+        )
+        target.rebucket(nb, properties={"epoch": str(epoch)})
+        return nb
+
+    # Start-of-run check: the per-apply trigger below only sees the buckets
+    # the apply just rewrote, so a crash between the manifest commit and the
+    # rebucket — or an oversized UNTOUCHED bucket — would otherwise never
+    # re-trigger. One driver-side footer read over the current snapshot (no
+    # Spark job) closes both gaps.
     if cfg.rebucket_above_rows and target.snapshot().files:
         counts = target.file_row_counts(target.snapshot().files)
-        if counts and max(counts.values()) > cfg.rebucket_above_rows:
-            nb = target.snapshot().num_buckets * 4
-            log.info(
-                "resume: bucket over %s rows in current snapshot — "
-                "rebucketing to %s before replay", cfg.rebucket_above_rows, nb,
-            )
-            target.rebucket(nb, properties={"epoch": str(last)})
+        maybe_rebucket(max(counts.values(), default=0), last)
 
     results = []
     stop = source.max_epoch()
     if cfg.max_epochs is not None:
         stop = min(stop, last + cfg.max_epochs)
-    import time as _time
-
-    known_rows = getattr(source, "epoch_rows", None)
-    chunk_size = max(1, int(cfg.catch_up_epochs or 1))
-    e = last + 1
-    while e <= stop:
+    for a in range(last + 1, stop + 1, cfg.catch_up_epochs):
         _t0 = _time.monotonic()
-        b = min(e + chunk_size - 1, stop)
-        if b > e and hasattr(source, "epochs"):
-            chunk = list(range(e, b + 1))
-            counts: dict[int, int] | None = {}
-            for ce in chunk:
-                c = known_rows(ce) if known_rows else None
-                if c is None:
-                    counts = None
-                    break
-                counts[ce] = c
-            res = apply_epoch(
-                spark, cfg, target, dlq, manifest, source.epochs(e, b),
-                chunk[-1], run_id, chunk=chunk, events_in_by_epoch=counts,
-            )
-        else:
-            res = apply_epoch(
-                spark, cfg, target, dlq, manifest, source.epoch(e), e, run_id,
-                events_in=known_rows(e) if known_rows else None,
-            )
+        b = min(a + cfg.catch_up_epochs - 1, stop)
+        known = {e: source.epoch_rows(e) for e in range(a, b + 1)}
+        res = apply_epoch(
+            spark, cfg, target, dlq, manifest, source.epochs(a, b), b, run_id,
+            events_in=None if None in known.values() else known, since=a,
+        )
         res["epoch_wall_s"] = round(_time.monotonic() - _t0, 3)
-        log.info("epoch %s: %s", res.get("epochs", e), res)
+        log.info("epochs %s..%s: %s", a, b, res)
         results.append(res)
-        committed = res["epochs"][-1] if "epochs" in res else e
-        if (
-            cfg.rebucket_above_rows
-            and res.get("max_bucket_rows", 0) > cfg.rebucket_above_rows
-        ):
-            nb = target.snapshot().num_buckets * 4
-            log.info(
-                "epoch %s: bucket grew past %s rows — rebucketing to %s",
-                committed, cfg.rebucket_above_rows, nb,
-            )
-            target.rebucket(nb, properties={"epoch": str(committed)})
+        nb = maybe_rebucket(res["max_bucket_rows"], b)
+        if nb:
             res["rebucketed_to"] = nb
-        e = committed + 1
     return results
 
 

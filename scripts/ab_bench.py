@@ -12,6 +12,15 @@ even when absolute seconds move 2x between rounds.
 Usage:
   python scripts/ab_bench.py --queries q1,q2 --iters 2 --rounds 3 \
       [--ref HEAD] [--tag exp1]
+  python scripts/ab_bench.py --perfbench stream_tail --seed 1 --rounds 5 \
+      [--seconds 8] [--ref HEAD]
+
+``--perfbench WORKLOAD`` alternates ``perfbench/run.py --trace 0`` runs of
+the ref snapshot (A) and the working tree (B), A first in even rounds and B
+first in odd ones. It prints, per end-to-end metric, A's median and
+quartiles, B's median and the pairs B won (lower), plus every run's
+``correct``/``failed``. It writes nothing under ``perfbench/`` (no bytecode
+either); each run's files live in the checkout's own ``.perfbench_tmp/``.
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -41,20 +51,97 @@ def run_side(repo_dir: str, queries: str, iters: int, tag: str) -> dict:
     return json.loads(line)
 
 
+def snapshot(ref: str) -> str:
+    """A temp dir holding ``git archive ref``."""
+    snap = tempfile.mkdtemp(prefix="ab_head_")
+    subprocess.run(
+        f"git -C {REPO} archive {ref} | tar -x -C {snap}",
+        shell=True, check=True,
+    )
+    return snap
+
+
+def run_perfbench(repo_dir: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced perfbench run in ``repo_dir``; its JSON result."""
+    env = dict(os.environ, PYTHONDONTWRITEBYTECODE="1")
+    out = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", "0"],
+        cwd=repo_dir, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
+        raise RuntimeError(f"perfbench/run.py printed no result in {repo_dir}")
+    return json.loads(lines[-1])
+
+
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    """(q1, median, q3) of ``xs``."""
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
+
+
+def perfbench_ab(args) -> None:
+    snap = snapshot(args.ref)
+    print(f"A = {args.ref} snapshot at {snap}; B = working tree {REPO}", file=sys.stderr)
+    runs: dict[str, list[dict]] = {"a": [], "b": []}
+    try:
+        for r in range(args.rounds):
+            order = (("a", snap), ("b", REPO))
+            # alternate which side runs first, so neither always runs warm
+            for side, repo_dir in order if r % 2 == 0 else order[::-1]:
+                res = run_perfbench(repo_dir, args.perfbench, args.seed, args.seconds)
+                runs[side].append(res)
+                vals = {k: round(v["value"], 3) for k, v in res["metrics"].items()}
+                print(f"round {r} {side.upper()}: correct={res['correct']} "
+                      f"failed={res['failed']} {vals}", file=sys.stderr)
+    finally:
+        shutil.rmtree(snap, ignore_errors=True)
+
+    def values(side: str, metric: str) -> list[float]:
+        return [x["metrics"][metric]["value"] for x in runs[side]]
+
+    report = {}
+    for metric in runs["a"][0]["metrics"]:
+        a, b = values("a", metric), values("b", metric)
+        q1, a_med, q3 = quartiles(a)
+        report[metric] = {
+            "a_median": round(a_med, 3), "a_q1": round(q1, 3), "a_q3": round(q3, 3),
+            "b_median": round(statistics.median(b), 3),
+            "b_wins": sum(y < x for x, y in zip(a, b)), "pairs": len(a),
+            "a": [round(x, 3) for x in a], "b": [round(y, 3) for y in b],
+        }
+        m = report[metric]
+        print(f"{metric}: A median {m['a_median']} (q1 {m['a_q1']}, q3 {m['a_q3']}) "
+              f"B median {m['b_median']}, B won {m['b_wins']}/{m['pairs']}", file=sys.stderr)
+    result = {
+        "ref": args.ref, "workload": args.perfbench, "seed": args.seed,
+        "seconds": args.seconds, "rounds": args.rounds, "metrics": report,
+        "runs": {side: [{"correct": x["correct"], "failed": x["failed"]} for x in xs]
+                 for side, xs in runs.items()},
+    }
+    print(json.dumps(result))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--queries", required=True)
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--queries")
+    mode.add_argument("--perfbench", metavar="WORKLOAD")
     ap.add_argument("--iters", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--ref", default="HEAD")
     ap.add_argument("--tag", default="ab")
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=8)
     args = ap.parse_args()
+    if args.perfbench:
+        perfbench_ab(args)
+        return
 
-    snap = tempfile.mkdtemp(prefix="ab_head_")
-    subprocess.run(
-        f"git -C {REPO} archive {args.ref} | tar -x -C {snap}",
-        shell=True, check=True,
-    )
+    snap = snapshot(args.ref)
     # the harness itself must be identical on both sides (the snapshot may
     # carry an older bench_extra)
     subprocess.run(

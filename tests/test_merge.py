@@ -217,3 +217,121 @@ def test_sparse_merge_is_four_jobs_and_pruned(spark, warehouse):
     expected.update({("x1", "q1"): "ins1", ("x2", "q2"): "ins2"})
     assert {k: v[2] for k, v in _state(t).items()} == expected
     assert t.read().count() == len(expected)
+
+
+def impure_files(spark, table) -> list[tuple[str, int]]:
+    """(file, bucket) for every file of the table's current snapshot holding
+    a key that hashes (``bucket_expr``) to another bucket than the file's
+    own — empty when every file is bucket-pure. One Spark job."""
+    from urllib.parse import urlparse
+
+    snap = table.snapshot()
+    bucket_of = {
+        os.path.join(table.root, f): int(b) for b, fs in snap.files.items() for f in fs
+    }
+    rows = (
+        spark.read.parquet(*bucket_of)
+        .select(
+            F.input_file_name().alias("f"),
+            bucket_expr(snap.key_cols, snap.num_buckets).alias("b"),
+        )
+        .distinct()
+        .collect()
+    )
+    return [
+        (r["f"], r["b"]) for r in rows if bucket_of[urlparse(r["f"]).path] != r["b"]
+    ]
+
+
+def spy_write_plans(monkeypatch, under: str) -> list[str]:
+    """Physical plans of the parquet writes whose path contains ``under``
+    (the kernel writes into ``_epoch_tmp``/``_merge_tmp`` dirs)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        if under in path:
+            plans.append(self._df._jdf.queryExecution().sparkPlan().toString())
+        return orig(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+def shuffle_widths(plan: str) -> list[int]:
+    """Partition counts of the plan's ``_pt`` repartitions."""
+    import re
+
+    return [int(n) for n in re.findall(r"hashpartitioning\(_pt#\d+, (\d+)\)", plan)]
+
+
+def test_sparse_epoch_write_runs_one_wave(spark, warehouse, monkeypatch):
+    """A sparse ``auto`` epoch touching more buckets than the session has
+    cores runs its one write shuffle on ``defaultParallelism`` reducers, not
+    one per touched bucket (its input is far below the advisory partition
+    size); the buckets fold onto them exactly, so every file stays
+    bucket-pure and the state equals the oracle."""
+    from wage_etl_spark.sources.events import EpochSource
+    from wage_etl_spark.sources.synth import synthesize_events
+    from wage_etl_spark.streaming.replay import ReplayConfig, open_tables, replay, verify_state
+
+    from tests.oracle import replay_oracle, sha_map
+
+    boot = 3000
+    ev = synthesize_events(
+        spark, n_events=boot + 40, n_keys=2000, n_epochs=1, invalid_frac=0.03
+    ).withColumn("epoch", F.when(F.col("event_seq") < boot, 0).otherwise(1).cast("long"))
+    src = EpochSource(ev)
+    cfg = ReplayConfig(warehouse=warehouse, num_buckets=32)
+    assert cfg.dedup_strategy == "auto"
+    replay(spark, ReplayConfig(warehouse=warehouse, num_buckets=32, max_epochs=1), src)
+
+    p = spark.sparkContext.defaultParallelism
+    touched = {
+        r["_b"]
+        for r in ev.filter("epoch = 1").select(bucket_expr(KEY_COLS, 32).alias("_b")).collect()
+    }
+    assert p < len(touched) < 32, (p, touched)
+
+    plans = spy_write_plans(monkeypatch, "_epoch_tmp")
+    (res,) = replay(spark, cfg, src)
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert shuffle_widths(plan) == [p], plan
+    assert res["reducers"] == p and "phases" in res
+
+    target, dlq, _ = open_tables(spark, cfg)
+    assert impure_files(spark, target) == []
+    oracle_state, _, n_quar = replay_oracle([r.asDict() for r in ev.collect()])
+    report = verify_state(spark, target, sha_map(oracle_state))
+    assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
+    assert dlq.read().count() == n_quar
+
+
+def test_unknown_size_source_keeps_full_width(spark, warehouse, monkeypatch):
+    """A ``merge_apply`` source built by ``createDataFrame`` from Python
+    rows has no size estimate (Long.MaxValue), so the shuffle keeps one
+    reducer per touched bucket (times the salt ways) and stays bucket-pure."""
+    from wage_etl_spark.plans.partitioning import salt_ways
+
+    t = make_target(spark, warehouse, nb=32)
+    merge_apply(t, _src(spark, [
+        (f"r{i}", f"p{i}", "1" * 40, i, "py", f"c{i}", "I") for i in range(300)
+    ]), ORDERING_COLS)
+    src = _src(spark, [
+        (f"r{i}", f"p{i}", "2" * 40, 1000 + i, "py", f"new{i}", "U") for i in range(12)
+    ])
+    touched = {
+        int(r["_b"]) for r in src.select(bucket_expr(KEY_COLS, 32).alias("_b")).collect()
+    }
+    assert len(touched) > spark.sparkContext.defaultParallelism
+
+    plans = spy_write_plans(monkeypatch, "_merge_tmp")
+    merge_apply(t, src, ORDERING_COLS)
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert shuffle_widths(plan) == [len(touched) * salt_ways(spark, 32)], plan
+    assert impure_files(spark, t) == []
+    assert {k: v[2] for k, v in _state(t).items() if k[0] == "r3"} == {("r3", "p3"): "new3"}

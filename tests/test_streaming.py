@@ -137,3 +137,38 @@ def test_stream_with_fused_strategy_matches_oracle(spark, tmp_path):
     target, dlq, manifest = open_tables(spark, cfg)
     assert verify_state(spark, target, sha_map(oracle_state))["equal"]
     assert dlq.read().count() == n_quar
+
+
+def test_fused_micro_batch_folds_buckets_and_stays_pure(spark, tmp_path, monkeypatch):
+    """A 16-bucket fused micro-batch (the live-tail shape) runs its write
+    shuffle on ``defaultParallelism`` reducers, not 16: every bucket folds
+    onto one reducer, so each file still holds only its own bucket's keys,
+    and the state equals the oracle."""
+    from tests.test_merge import impure_files, shuffle_widths, spy_write_plans
+
+    ev = synthesize_events(spark, n_events=1200, n_keys=300, n_epochs=1, invalid_frac=0.04)
+    events_dir = str(tmp_path / "events")
+    _write_stream_files(spark, ev, events_dir, n_files=2)
+    cfg = ReplayConfig(
+        warehouse=str(tmp_path / "wh"), num_buckets=16, dedup_strategy="fused",
+        keep_tombstones=True,
+    )
+    schema = spark.read.parquet(events_dir).schema
+    plans = spy_write_plans(monkeypatch, "_epoch_tmp")
+    q = start_stream(
+        spark, cfg, stream_events(spark, events_dir, schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+
+    assert len(plans) == 2
+    p = spark.sparkContext.defaultParallelism
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert shuffle_widths(plan) == [p], plan
+    target, dlq, _ = open_tables(spark, cfg)
+    assert len(target.snapshot().files) == 16
+    assert impure_files(spark, target) == []
+    oracle_state, _, n_quar = replay_oracle_global([r.asDict() for r in ev.collect()])
+    assert verify_state(spark, target, sha_map(oracle_state))["equal"]
+    assert dlq.read().count() == n_quar

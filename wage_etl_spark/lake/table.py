@@ -304,7 +304,18 @@ class LakeTable:
             for f in fs
         ]
         if not files:
-            return self.spark.createDataFrame([], snap.schema)
+            # an empty LocalRelation: its size is known (0 bytes; an empty
+            # Python-rows createDataFrame reports Long.MaxValue), so writes
+            # size their shuffle from the estimate, and the optimizer drops
+            # it from a union (null-literal columns would be constant-folded
+            # into the kernel's bucket-slot expressions instead)
+            js = self.spark._jsparkSession
+            return DataFrame(
+                js.createDataFrame(
+                    self.spark._jvm.java.util.ArrayList(), js.parseDataType(snap.schema.json())
+                ),
+                self.spark,
+            )
         df = self.spark.read.schema(self._physical_schema(snap)).parquet(*files)
         return df.withColumnsRenamed(snap.renames)
 
@@ -321,18 +332,18 @@ class LakeTable:
     def _write_files(self, df: DataFrame, snap: Snapshot) -> dict[str, list[str]]:
         """Write df bucketed by key into a fresh commit dir; returns the
         bucket -> relative-path map. One parquet file per bucket: the
-        repartition below is the only shuffle, and downstream MERGE reads
-        are pruned per bucket."""
-        from wage_etl_spark.plans.partitioning import repartition_exact
+        repartition below is the only shuffle, every bucket lies in one of
+        its reducers, and downstream MERGE reads are pruned per bucket."""
+        from wage_etl_spark.plans.partitioning import repartition_exact, shuffle_width
 
         out_path = os.path.join(self.data_dir, uuid.uuid4().hex)
-        # collision-free bucket->reducer assignment (partitioning.py)
-        physical = repartition_exact(
-            to_physical(
-                df.withColumn("_b", bucket_expr(snap.key_cols, snap.num_buckets)), snap.renames
-            ),
-            F.col("_b"), snap.num_buckets,
-        ).drop("_pt")
+        bucketed = to_physical(
+            df.withColumn("_b", bucket_expr(snap.key_cols, snap.num_buckets)), snap.renames
+        )
+        # collision-free bucket->reducer assignment, bucket b on reducer
+        # b mod R (partitioning.py)
+        reducers = shuffle_width(bucketed, snap.num_buckets)
+        physical = repartition_exact(bucketed, F.col("_b") % reducers, reducers).drop("_pt")
         physical.write.partitionBy("_b").mode("append").parquet(out_path)
         return {
             b: [os.path.relpath(p, self.root) for p in fs]

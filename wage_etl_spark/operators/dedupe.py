@@ -342,19 +342,22 @@ def dedup_clusters(
     Scale shape: every round is two equi-joins + a min-aggregate over
     (id, label) pairs — ~16 B/row, document text never enters the loop; the
     edge list is shuffled once per round on small integer keys. Each round
-    runs exactly ONE Spark action: the round result is lazily
-    local-checkpointed and the convergence check is a single slim aggregate
-    over it, which both materializes the checkpoint and returns the
-    changed-row count. Plans stay bounded because each round starts from
-    the prior round's checkpoint leaf: a round references the prior labels
-    four times, so a persist alone (which keeps the logical lineage) grows
-    the plan 4x per round and exhausts the driver heap on a long chain
-    within ~5 rounds. A lost executor loses its checkpoint blocks and the
-    next round fails with a missing-block error rather than recomputing.
-    Raises ``RuntimeError`` if ``max_iter``
-    rounds elapse without convergence — silent wrong labels are never
-    returned. Returns a deterministic assignment (min is
-    order-independent)."""
+    has one convergence action: the round result is local-checkpointed with
+    ``eager=False`` and a single slim aggregate over it both fills the
+    checkpoint and returns the changed-row count. That is not one Spark job
+    per round: under AQE, ``localCheckpoint(eager=False)`` still executes
+    the plan's shuffle map stages when it is called (AQE materializes its
+    query stages to build the RDD it checkpoints); only the final stage
+    waits for the aggregate. On sf0.001 the label init runs 3 jobs and a
+    round's checkpoint 7, all before the ``first()``. Plans stay bounded
+    because each round starts from the prior round's checkpoint leaf: a
+    round references the prior labels four times, so a persist alone (which
+    keeps the logical lineage) grows the plan 4x per round and exhausts the
+    driver heap on a long chain within ~5 rounds. A lost executor loses its
+    checkpoint blocks and the next round fails with a missing-block error
+    rather than recomputing. Raises ``RuntimeError`` if ``max_iter`` rounds
+    elapse without convergence — silent wrong labels are never returned.
+    Returns a deterministic assignment (min is order-independent)."""
     # checkpoint the DIRECTED pairs first, then symmetrize from the
     # materialized set: a union of two branches that both plan the upstream
     # pair pipeline (LSH + shingle verify) executes that pipeline once per
@@ -414,8 +417,9 @@ def dedup_clusters(
                 "id", "_old", F.least(F.col("_l1"), F.col("_llabel")).alias("label")
             )
         ).localCheckpoint(eager=False)
-        # ONE action: the aggregate scan populates the checkpoint AND returns
-        # the changed count — no separate materialization job per round.
+        # one action: the aggregate scan fills the checkpoint AND returns
+        # the changed count (the exchanges' map stages already ran at the
+        # localCheckpoint call, under AQE)
         changed = (
             jumped.agg(
                 F.sum((F.col("label") != F.col("_old")).cast("long")).alias("c")

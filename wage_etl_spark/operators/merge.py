@@ -19,17 +19,23 @@ route). Its plan, and why it scales:
    for Iceberg partition pruning); their rows re-enter next to the source
    as ``_is_source=0`` — a persisted tombstone as a delete, or the bucket
    rewrite would silently undelete it.
-3. the match is not a join: ONE collision-free repartition on the
-   touched-rank slot token (one reducer per touched bucket, sub-split
-   ``mult`` ways by a key salt), then a bucket-local sort + ``lag``
-   (``lww_keep``, the one tie order) keeps each key's winner. Re-applying a
-   source is idempotent (equal versions -> source wins -> same bytes).
+3. the match is not a join: ONE collision-free repartition on a slot
+   token. Each touched bucket is a slot (its rank in the touched set),
+   sub-split ``mult`` ways by a key salt; the slot·mult combos fold onto R
+   reducers (combo i -> reducer i mod R, exactly), R sized per apply from
+   the optimizer's size estimate of the shuffle input
+   (``plans.partitioning.shuffle_width``): a small apply runs one wave of
+   ``defaultParallelism`` tasks instead of a task per bucket. Then a
+   reducer-local sort + ``lag`` (``lww_keep``, the one tie order) keeps
+   each key's winner. Re-applying a source is idempotent (equal versions ->
+   source wins -> same bytes).
 4. op='D' winners drop out (each touched bucket is rewritten whole, so the
    key disappears) or, with tombstones, persist as ``is_deleted`` rows.
-5. one ``partitionBy(_route, _b)`` write reuses the exchange's partitioning,
-   and ``LakeTable.overwrite_with_files(..., touched=)`` splices the
-   ``stage`` files in; untouched buckets' files carry over, so an epoch
-   touching 1% of keys rewrites ~1% of the data.
+5. one ``partitionBy(_route, _b)`` write reuses the exchange's partitioning
+   (every bucket lies in one reducer: one file per bucket and route), and
+   ``LakeTable.overwrite_with_files(..., touched=)`` splices the ``stage``
+   files in; untouched buckets' files carry over, so an epoch touching 1%
+   of keys rewrites ~1% of the data.
 
 MERGE's duplicate-source-key hazard (Iceberg raises on ambiguous matches) is
 structurally impossible here: the bucket-local sort collapses duplicate
@@ -43,13 +49,15 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from wage_etl_spark.lake.table import (
     LakeTable, Snapshot, align_columns, bucket_expr, bucket_files, to_physical,
 )
-from wage_etl_spark.plans.partitioning import exact_partition_column
+from wage_etl_spark.plans.partitioning import (
+    exact_partition_column, salt_ways, shuffle_width,
+)
 
 
 def lww_keep(columns, key_cols: list[str], ordering_cols: list[str], group_extra=()) -> Column:
@@ -74,18 +82,12 @@ def lww_keep(columns, key_cols: list[str], ordering_cols: list[str], group_extra
     return ~F.lag(g).over(w).eqNullSafe(g)
 
 
-def shuffle_mult(spark: SparkSession, num_buckets: int) -> int:
-    """Reducers per bucket, so the single stage fills the session's cores.
-    The salt splitting a bucket is a hash OF THE KEY, so each key's rows
-    still meet in one partition and the write stays bucket-pure."""
-    return max(1, min(8, spark.sparkContext.defaultParallelism // num_buckets))
-
-
 class LWWKernel:
     """The single-shuffle LWW plan (steps 1-5 above) for one snapshot spec,
-    evolved ``schema``, ordering and shuffle width. Its Columns are built
-    once (Py4J-chatty) and bound to names only, so ``apply_epoch`` reuses a
-    kernel across epochs.
+    evolved ``schema``, ordering and salt ways ``mult``
+    (``plans.partitioning.salt_ways``). Its Columns are built once
+    (Py4J-chatty) and bound to names only, so ``apply_epoch`` reuses a
+    kernel across epochs; the reducer count is sized per ``write``.
 
     Source rows carry ``_route`` (only ``stage`` rows become table state),
     ``schema``'s columns, ``_qid`` (null, or unique on a row that must never
@@ -118,7 +120,6 @@ class LWWKernel:
         self.salt_col = F.pmod(
             F.xxhash64(*[F.col(c) for c in key_cols], F.lit(0x5417)), F.lit(mult)
         ).cast("int")
-        self.all_buckets_pt = self._pt(F.col("_b"), snap.num_buckets)
         self.keep_col = lww_keep(
             [*schema.fieldNames(), "_op"], key_cols, ordering_cols, ["_qid"]
         )
@@ -126,12 +127,12 @@ class LWWKernel:
         self.tombstone_col = F.when(is_stage, F.col("_op") == "D")
         self.live_col = ~is_stage | (F.col("_op") != "D")
 
-    def _pt(self, slot: Column, n_slots: int) -> Column:
-        """Reducer token of a row whose bucket has slot ``slot`` in
-        [0, n_slots), sub-split ``mult`` ways (combo i -> reducer i exactly,
+    def _pt(self, slot: Column, reducers: int) -> Column:
+        """Reducer token of a row whose bucket has slot ``slot``, sub-split
+        ``mult`` ways (combo i -> reducer i mod ``reducers`` exactly,
         plans/partitioning.py)."""
         combo = slot * self.mult + F.col("_salt") if self.mult > 1 else slot
-        return exact_partition_column(combo, n_slots * self.mult)
+        return exact_partition_column(combo % reducers, reducers)
 
     def bucket_counts(self, source: DataFrame, *by: str) -> dict[tuple, int]:
         """Step 1: source rows per (bucket, *``by``) — the buckets are the
@@ -143,31 +144,32 @@ class LWWKernel:
 
     def write(
         self, table: LakeTable, source: DataFrame, touched: set[int] | None, out_dir: str,
-    ) -> dict[str, dict[str, list[str]]]:
+    ) -> tuple[dict[str, dict[str, list[str]]], int]:
         """Steps 2-5 into ``out_dir`` (``touched=None``: every bucket,
-        unpruned). Returns route -> bucket id -> file paths, with physical
-        column names, ready for ``overwrite_with_files``."""
+        unpruned). Returns (route -> bucket id -> file paths, with physical
+        column names, ready for ``overwrite_with_files``; the shuffle's
+        reducer count)."""
         if touched == set():
-            return {}  # an empty pruned apply has nothing to write
+            return {}, 0  # an empty pruned apply has nothing to write
         unioned = table.read(buckets=touched).select(*self.target_cols).unionByName(
             source, allowMissingColumns=True
         )
         bucketed = unioned.withColumn("_b", self.bucket_col)
         if self.mult > 1:
             bucketed = bucketed.withColumn("_salt", self.salt_col)
-        n_slots, pt_col = self.num_buckets, self.all_buckets_pt
+        n_slots, slot = self.num_buckets, F.col("_b")
         if touched is not None:
-            # reducers for the touched buckets only (slot = rank in the
-            # touched set): an untouched bucket's reducer would just run an
-            # empty task
+            # slots for the touched buckets only (slot = rank in the touched
+            # set): an untouched bucket's combos would only cap R higher
             ranks = sorted(touched)
             n_slots = len(ranks)
             slot = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b")).cast("int") - 1
-            pt_col = self._pt(slot, n_slots)
+        # sized per apply, never cached: R follows this apply's input size
+        reducers = shuffle_width(bucketed, n_slots * self.mult)
         # THE shuffle; the window partitions by the token (a bijection of
-        # the combo), so lww_keep adds no second exchange
+        # the reducer), so lww_keep adds no second exchange
         merged = (
-            bucketed.withColumn("_pt", pt_col).repartition(n_slots * self.mult, "_pt")
+            bucketed.withColumn("_pt", self._pt(slot, reducers)).repartition(reducers, "_pt")
             .withColumn("_keep", self.keep_col)
             .filter(F.col("_keep"))
         )
@@ -183,7 +185,7 @@ class LWWKernel:
         return {
             r[len("_route="):]: bucket_files(os.path.join(out_dir, r))
             for r in os.listdir(out_dir) if r.startswith("_route=")
-        }
+        }, reducers
 
     def splice(
         self, table: LakeTable, files: dict[str, dict[str, list[str]]],
@@ -231,7 +233,7 @@ def merge_apply(
     # schema evolution: union of table schema and source payload schema
     schema, _, _ = table._merged_schema(winners.drop(op_col))
     kernel = LWWKernel(
-        snap, schema, ordering_cols, shuffle_mult(table.spark, snap.num_buckets),
+        snap, schema, ordering_cols, salt_ways(table.spark, snap.num_buckets),
         tombstones=False,
     )
     src_op = F.col(op_col) if op_col in winners.columns else F.lit("U")
@@ -252,7 +254,7 @@ def merge_apply(
 
     out_dir = os.path.join(table.root, "_merge_tmp", uuid.uuid4().hex)
     try:
-        files = kernel.write(table, src, touched, out_dir)
+        files, _ = kernel.write(table, src, touched, out_dir)
         new_snap, bucket_counts = kernel.splice(table, files, properties or {}, touched)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

@@ -34,9 +34,10 @@ from wage_etl_spark.lake.manifest import (
 )
 from wage_etl_spark.lake.table import LakeTable, align_columns
 from wage_etl_spark.operators.dedup_lww import dedup_lww
-from wage_etl_spark.operators.merge import LWWKernel, shuffle_mult
+from wage_etl_spark.operators.merge import LWWKernel
 # not called here: perfbench/layers.py:install wraps this module-level name
 from wage_etl_spark.operators.merge import merge_apply  # noqa: F401
+from wage_etl_spark.plans.partitioning import salt_ways
 
 log = logging.getLogger("wage_etl_spark.replay")
 
@@ -185,10 +186,11 @@ def _plan_pieces(
     ~0.4-0.5 s PER EPOCH of pure driver-side expression building (40+
     cast/alias columns x several selects), a fixed floor that dominates
     small epochs. Everything here depends only on (events schema, table
-    schema, bucket spec, tombstone mode, shuffle width) — the cache key in
-    ``apply_epoch`` — so a 16-epoch replay builds it once. Column objects
-    are unresolved expression trees bound to names, not to a DataFrame, so
-    reuse across epochs is sound."""
+    schema, bucket spec, tombstone mode, salt ways) — the cache key in
+    ``apply_epoch`` — so a 16-epoch replay builds it once. The shuffle's
+    reducer count is not a piece: the kernel sizes it per apply. Column
+    objects are unresolved expression trees bound to names, not to a
+    DataFrame, so reuse across epochs is sound."""
     from wage_etl_spark.operators.validate import REASON_MAX_LEN, violation_rules
 
     P: dict = {}
@@ -340,7 +342,7 @@ def apply_epoch(
 
     snap = target.snapshot()
 
-    mult = shuffle_mult(spark, snap.num_buckets)
+    mult = salt_ways(spark, snap.num_buckets)
 
     # Plan-piece cache (see _plan_pieces): every expression below depends
     # only on this key, so a multi-epoch replay pays the Py4J-heavy Column
@@ -388,7 +390,7 @@ def apply_epoch(
     epoch_tmp = os.path.join(cfg.warehouse, "_epoch_tmp", _uuid.uuid4().hex)
     try:
         _mark("plan")
-        files = kernel.write(target, ev_side, touched, epoch_tmp)
+        files, reducers = kernel.write(target, ev_side, touched, epoch_tmp)
         _mark("write")
 
         dlq_files = [p for fs in files.get("dlq", {}).values() for p in fs]
@@ -432,7 +434,7 @@ def apply_epoch(
         partition_counts={int(b): c for b, c in bucket_counts.items()},
     )
     _mark("manifest")
-    log.debug("epochs %s..%s phases: %s", epochs[0], epoch, _phase)
+    log.debug("epochs %s..%s phases: %s reducers: %s", epochs[0], epoch, _phase, reducers)
     n_in = sum(m["events_in"] for m in per_epoch)
     n_quarantined = sum(m["rows_quarantined"] for m in per_epoch)
     return {
@@ -441,7 +443,7 @@ def apply_epoch(
         "valid": n_in - n_quarantined, "quarantined": n_quarantined,
         "rows_written": rows_written, "snapshot": new_snap.version,
         "max_bucket_rows": max(bucket_counts.values(), default=0),
-        "phases": _phase,
+        "phases": _phase, "reducers": reducers,
     }
 
 

@@ -21,6 +21,12 @@ def spark():
     yield s
 
 
+def next_job_id(spark) -> int:
+    """The id the session's next Spark job will get: the difference of two
+    reads is the number of jobs run in between."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 @pytest.fixture()
 def warehouse(tmp_path):
     return str(tmp_path / "warehouse")

@@ -25,6 +25,8 @@ from wage_etl_spark.streaming.replay import (
     ReplayConfig, open_tables, reference_state, replay, verify_state,
 )
 
+from tests.conftest import next_job_id
+
 
 def _state_map(table):
     df = table.read()
@@ -210,10 +212,9 @@ def test_auto_chunk_counts_in_the_bucket_count(spark, tmp_path):
     cfg = ReplayConfig(warehouse=str(tmp_path / "wh"), num_buckets=8, catch_up_epochs=4)
     replay(spark, dataclasses.replace(cfg, max_epochs=1), src)
 
-    jsc = spark.sparkContext._jsc.sc()
-    j0 = int(jsc.dagScheduler().nextJobId())
+    j0 = next_job_id(spark)
     res = replay(spark, cfg, src)
-    assert int(jsc.dagScheduler().nextJobId()) - j0 <= 4
+    assert next_job_id(spark) - j0 <= 4
     assert [r["epochs"] for r in res] == [[1, 2, 3, 4]]
     expected = {
         int(r["epoch"]): int(r["count"])

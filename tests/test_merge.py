@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from wage_etl_spark.lake.table import LakeTable, bucket_expr
-from wage_etl_spark.operators.merge import merge_apply
+from wage_etl_spark.operators.merge import LWWKernel, merge_apply
 from wage_etl_spark.streaming.replay import TARGET_SCHEMA, KEY_COLS, ORDERING_COLS
+
+from tests.conftest import next_job_id
 
 SRC_SCHEMA = (
     "repo string, path string, commit string, event_seq long, lang string, "
@@ -175,10 +178,6 @@ def test_merge_is_single_shuffle(spark, warehouse, monkeypatch):
     assert "Window" in captured["plan"] or "Sort" in captured["plan"]
 
 
-def _next_job_id(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-
-
 def test_sparse_merge_is_four_jobs_and_pruned(spark, warehouse):
     """A 10-row merge_apply into a 32-bucket table runs the epoch apply's
     pruned plan: at most 4 Spark jobs (the per-bucket count and the write,
@@ -201,9 +200,9 @@ def test_sparse_merge_is_four_jobs_and_pruned(spark, warehouse):
             bucket_expr(KEY_COLS, 32).alias("_b")
         ).collect()
     }
-    j0 = _next_job_id(spark)
+    j0 = next_job_id(spark)
     snap, rows, per_bucket = merge_apply(t, src, ORDERING_COLS)
-    jobs = _next_job_id(spark) - j0
+    jobs = next_job_id(spark) - j0
     assert jobs <= 4, f"10-row merge_apply ran {jobs} Spark jobs"
 
     assert set(map(int, per_bucket)) <= touched and rows == sum(per_bucket.values())
@@ -335,3 +334,28 @@ def test_unknown_size_source_keeps_full_width(spark, warehouse, monkeypatch):
     assert shuffle_widths(plan) == [len(touched) * salt_ways(spark, 32)], plan
     assert impure_files(spark, t) == []
     assert {k: v[2] for k, v in _state(t).items() if k[0] == "r3"} == {("r3", "p3"): "new3"}
+
+
+def test_row_outside_touched_set_is_refused(spark, warehouse, monkeypatch):
+    """A source whose second read puts a row in a bucket the count did not
+    see: the write gives that row a null slot (not slot -1, which would index
+    the token array at 0 or from its end), and the splice refuses the stray
+    bucket before anything is committed."""
+    t = make_target(spark, warehouse)
+    boot = [(f"r{i}", f"p{i}", "1" * 40, i, "py", f"c{i}", "I") for i in range(40)]
+    merge_apply(t, _src(spark, boot), ORDERING_COLS)
+    version, before = t.current_version(), _state(t)
+
+    count = LWWKernel.bucket_counts
+
+    def drop_one_bucket(self, source, *by):
+        counts = count(self, source, *by)
+        dropped = min(counts)
+        return {k: n for k, n in counts.items() if k != dropped}
+
+    monkeypatch.setattr(LWWKernel, "bucket_counts", drop_one_bucket)
+    upd = [(f"r{i}", f"p{i}", "2" * 40, 100 + i, "py", f"n{i}", "U") for i in range(40)]
+    with pytest.raises(ValueError, match="outside the touched set"):
+        merge_apply(t, _src(spark, upd), ORDERING_COLS)
+    assert t.current_version() == version
+    assert _state(t) == before

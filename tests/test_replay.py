@@ -12,6 +12,7 @@ from wage_etl_spark.sources.events import EpochSource
 from wage_etl_spark.sources.synth import synthesize_events
 from wage_etl_spark.streaming.replay import ReplayConfig, open_tables, replay, verify_state
 
+from tests.conftest import next_job_id
 from tests.oracle import replay_oracle, sha_map
 
 
@@ -332,10 +333,6 @@ def test_rebucket_retriggers_on_resume_after_crash_before_rebucket(spark, wareho
     assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
 
 
-def _next_job_id(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-
-
 def _sparse_stream(spark, boot=3000, tail=15):
     """A bootstrap epoch 0 and one tiny epoch 1 over a wide keyspace."""
     ev = synthesize_events(
@@ -362,9 +359,9 @@ def test_sparse_auto_epoch_is_pruned_and_four_jobs(spark, warehouse):
     target, dlq, manifest = open_tables(spark, cfg)
     before = target.snapshot()
 
-    j0 = _next_job_id(spark)
+    j0 = next_job_id(spark)
     res = replay(spark, cfg, src)
-    jobs = _next_job_id(spark) - j0
+    jobs = next_job_id(spark) - j0
     assert [r["epoch"] for r in res] == [1]
     assert jobs <= 4, jobs
 
@@ -401,9 +398,9 @@ def test_empty_auto_epoch_keeps_file_map(spark, warehouse):
     before, v0 = target.snapshot(), target.current_version()
 
     empty = ev.filter(F.lit(False))
-    j0 = _next_job_id(spark)
+    j0 = next_job_id(spark)
     res = apply_epoch(spark, cfg, target, dlq, manifest, empty, 1, 2)
-    assert _next_job_id(spark) - j0 <= 2
+    assert next_job_id(spark) - j0 <= 2
     assert res["events_in"] == 0 and res["status"] == "SUCCESS"
     assert target.current_version() == v0 + 1
     assert target.snapshot().files == before.files

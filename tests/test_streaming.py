@@ -172,3 +172,26 @@ def test_fused_micro_batch_folds_buckets_and_stays_pure(spark, tmp_path, monkeyp
     oracle_state, _, n_quar = replay_oracle_global([r.asDict() for r in ev.collect()])
     assert verify_state(spark, target, sha_map(oracle_state))["equal"]
     assert dlq.read().count() == n_quar
+
+
+def test_stream_honors_rebucket_above_rows(spark, tmp_path):
+    """``rebucket_above_rows`` reaches the stream front-end: a 2-bucket
+    target whose buckets pass 50 rows after a micro-batch is rebucketed to
+    8, the next micro-batches apply against 8 buckets, and the final state
+    equals the order-independent oracle."""
+    ev = synthesize_events(spark, n_events=1200, n_keys=200, n_epochs=1, invalid_frac=0.04)
+    events_dir = str(tmp_path / "events")
+    _write_stream_files(spark, ev, events_dir)
+    cfg = ReplayConfig(warehouse=str(tmp_path / "wh"), num_buckets=2, rebucket_above_rows=50)
+    schema = spark.read.parquet(events_dir).schema
+    q = start_stream(
+        spark, cfg, stream_events(spark, events_dir, schema, max_files_per_trigger=2),
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+
+    target, dlq, _ = open_tables(spark, cfg)
+    assert target.snapshot().num_buckets == 8
+    oracle_state, _, n_quar = replay_oracle_global([r.asDict() for r in ev.collect()])
+    assert verify_state(spark, target, sha_map(oracle_state))["equal"]
+    assert dlq.read().count() == n_quar

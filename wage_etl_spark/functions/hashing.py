@@ -24,12 +24,6 @@ def md5_int(col: Column | str, salt: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def sha256_hex(col: Column | str) -> Column:
-    """Per-row content invariant (BASELINE.json): sha256 hex digest."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
-
-
 def rolling_fingerprint(tokens: Column) -> Column:
     """Polynomial rolling hash over a token array:
     h = fold(tokens, 0, (h, t) -> (h * 1000003 + md5_int(t)) % (1e9+7)).

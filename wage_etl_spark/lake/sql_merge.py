@@ -214,7 +214,6 @@ def merge_into(
     tables: dict[str, LakeTable],
     sources: dict[str, DataFrame] | None = None,
     properties: dict[str, str] | None = None,
-    check_duplicate_keys: bool = True,
 ):
     """Execute a MERGE INTO statement against a LakeTable. Returns the
     (snapshot, rows_written, rows_per_bucket) triple of ``merge_apply``."""
@@ -234,20 +233,19 @@ def merge_into(
             f"declared key"
         )
 
-    if check_duplicate_keys:
-        dup = (
-            src.groupBy(*snap.key_cols)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
+    dup = (
+        src.groupBy(*snap.key_cols)
+        .count()
+        .filter(F.col("count") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            "MERGE source has multiple rows per key (first: "
+            f"{ {k: dup[0][k] for k in snap.key_cols} }) — "
+            "non-deterministic merge, same error class as Iceberg's"
         )
-        if dup:
-            raise ValueError(
-                "MERGE source has multiple rows per key (first: "
-                f"{ {k: dup[0][k] for k in snap.key_cols} }) — "
-                "non-deterministic merge, same error class as Iceberg's"
-            )
 
     del_branches = [b for b in p.branches if b.action == "delete"]
     del_cond = del_branches[0].cond if del_branches else None

@@ -45,7 +45,6 @@ import os
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -645,13 +644,3 @@ class LakeTable:
                 pq.ParquetFile(os.path.join(self.root, f)).metadata.num_rows for f in fs
             )
         return out
-
-    def stats(self) -> dict[str, Any]:
-        snap = self.snapshot()
-        return {
-            "version": snap.version,
-            "num_buckets": snap.num_buckets,
-            "num_files": len(snap.all_files()),
-            "operation": snap.operation,
-            "properties": snap.properties,
-        }

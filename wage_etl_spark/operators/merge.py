@@ -160,10 +160,14 @@ class LWWKernel:
         n_slots, slot = self.num_buckets, F.col("_b")
         if touched is not None:
             # slots for the touched buckets only (slot = rank in the touched
-            # set): an untouched bucket's combos would only cap R higher
+            # set): an untouched bucket's combos would only cap R higher. A
+            # row outside the set (a source that changed between the count
+            # and this read) gets a null slot, so a null token: it is still
+            # written under its own _b=, and the splice refuses it
             ranks = sorted(touched)
             n_slots = len(ranks)
-            slot = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b")).cast("int") - 1
+            pos = F.array_position(F.array(*map(F.lit, ranks)), F.col("_b"))
+            slot = F.nullif(pos, F.lit(0)).cast("int") - 1
         # sized per apply, never cached: R follows this apply's input size
         reducers = shuffle_width(bucketed, n_slots * self.mult)
         # THE shuffle; the window partitions by the token (a bijection of

@@ -11,8 +11,6 @@ later epoch genuinely "adds" a column and exercises schema-merge-on-write.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # columns that may appear mid-stream (schema-evolution candidates)
@@ -102,5 +100,3 @@ class EpochSource:
             df = df.drop(*sorted(dead))
         return df
 
-
-EpochFn = Callable[[int], DataFrame]

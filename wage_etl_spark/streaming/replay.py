@@ -97,10 +97,11 @@ class ReplayConfig:
     # rewritten bucket exceeds this row count, the target is rebucketed to
     # 4x its current bucket count (LakeTable.rebucket) before the next
     # epoch — the layout grows with the table instead of being fixed at
-    # bootstrap. None disables. Crash-safe: the rebucket snapshot carries
-    # the already-committed epoch's tag, so rollback never drops it, and
-    # replay() additionally checks the CURRENT snapshot's per-bucket row
-    # counts at start-of-run (parquet footers, no Spark job), so a crash
+    # bootstrap (also after each start_stream micro-batch). None disables.
+    # Crash-safe: the rebucket snapshot carries the already-committed
+    # epoch's tag, so rollback never drops it, and replay() and
+    # start_stream() additionally check the CURRENT snapshot's per-bucket
+    # row counts at start-of-run (parquet footers, no Spark job), so a crash
     # between the manifest commit and the rebucket re-triggers it on resume
     # even if later epochs never rewrite the oversized bucket.
     rebucket_above_rows: int | None = None
@@ -160,6 +161,32 @@ def _rollback_orphans(table: LakeTable, last_epoch: int) -> None:
     if good is not None and good != cur.version:
         log.warning("rolling back %s to v%s (orphan epoch %s)", table.root, good, cur_epoch)
         table.rollback_to(good, properties={"epoch": str(last_epoch)})
+
+
+def maybe_rebucket(cfg: ReplayConfig, target: LakeTable, max_rows: int, epoch: int) -> int | None:
+    """Rebucket the target to 4x its buckets when a bucket has more than
+    ``cfg.rebucket_above_rows`` rows; the snapshot carries the committed
+    ``epoch``'s tag. Returns the new bucket count, or None."""
+    if not cfg.rebucket_above_rows or max_rows <= cfg.rebucket_above_rows:
+        return None
+    nb = target.snapshot().num_buckets * 4
+    log.info(
+        "epoch %s: a bucket has over %s rows — rebucketing to %s",
+        epoch, cfg.rebucket_above_rows, nb,
+    )
+    target.rebucket(nb, properties={"epoch": str(epoch)})
+    return nb
+
+
+def rebucket_at_start(cfg: ReplayConfig, target: LakeTable, last: int) -> None:
+    """Start-of-run check, after the orphan rollback: the per-apply trigger
+    only sees the buckets the apply just rewrote, so a crash between the
+    manifest commit and the rebucket — or an oversized UNTOUCHED bucket —
+    would otherwise never re-trigger. One driver-side footer read over the
+    current snapshot (no Spark job) closes both gaps."""
+    if cfg.rebucket_above_rows and target.snapshot().files:
+        counts = target.file_row_counts(target.snapshot().files)
+        maybe_rebucket(cfg, target, max(counts.values(), default=0), last)
 
 
 def _check_no_renames(target: LakeTable) -> None:
@@ -462,28 +489,7 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
     _rollback_orphans(dlq, last)
     run_id = next_run_id(manifest)
 
-    def maybe_rebucket(max_rows: int, epoch: int) -> int | None:
-        """Rebucket the target to 4x its buckets when a bucket has more
-        than ``cfg.rebucket_above_rows`` rows; the snapshot carries the
-        committed ``epoch``'s tag."""
-        if not cfg.rebucket_above_rows or max_rows <= cfg.rebucket_above_rows:
-            return None
-        nb = target.snapshot().num_buckets * 4
-        log.info(
-            "epoch %s: a bucket has over %s rows — rebucketing to %s",
-            epoch, cfg.rebucket_above_rows, nb,
-        )
-        target.rebucket(nb, properties={"epoch": str(epoch)})
-        return nb
-
-    # Start-of-run check: the per-apply trigger below only sees the buckets
-    # the apply just rewrote, so a crash between the manifest commit and the
-    # rebucket — or an oversized UNTOUCHED bucket — would otherwise never
-    # re-trigger. One driver-side footer read over the current snapshot (no
-    # Spark job) closes both gaps.
-    if cfg.rebucket_above_rows and target.snapshot().files:
-        counts = target.file_row_counts(target.snapshot().files)
-        maybe_rebucket(max(counts.values(), default=0), last)
+    rebucket_at_start(cfg, target, last)
 
     results = []
     stop = source.max_epoch()
@@ -500,7 +506,7 @@ def replay(spark: SparkSession, cfg: ReplayConfig, source) -> list[dict]:
         res["epoch_wall_s"] = round(_time.monotonic() - _t0, 3)
         log.info("epochs %s..%s: %s", a, b, res)
         results.append(res)
-        nb = maybe_rebucket(res["max_bucket_rows"], b)
+        nb = maybe_rebucket(cfg, target, res["max_bucket_rows"], b)
         if nb:
             res["rebucketed_to"] = nb
     return results

@@ -22,8 +22,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# apply_epoch and last_committed_epoch are called through this module's
+# globals: perfbench/layers.py:install wraps them here
 from wage_etl_spark.lake.manifest import last_committed_epoch
-from wage_etl_spark.streaming.replay import ReplayConfig, apply_epoch, open_tables
+from wage_etl_spark.streaming.replay import (
+    ReplayConfig, _rollback_orphans, apply_epoch, maybe_rebucket, open_tables,
+    rebucket_at_start,
+)
 
 
 def stream_events(
@@ -45,7 +50,6 @@ def start_stream(
     events_stream: DataFrame,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    allow_no_tombstones: bool = False,
 ):
     """Run the CDC pipeline over a stream. Exactly-once: Spark's streaming
     checkpoint gives at-least-once foreachBatch invocations with stable
@@ -56,35 +60,41 @@ def start_stream(
     Micro-batch boundaries are arbitrary file groupings, NOT version order,
     so the stream front-end FORCES keep_tombstones=True: without a tombstone
     a delete leaves no trace and a late lower-version event would silently
-    resurrect the key. Readers must filter is_deleted. Pass
-    ``allow_no_tombstones=True`` only when the source is known to deliver
-    batches in non-decreasing version order (then cfg.keep_tombstones is
-    honored as given)."""
-    if not cfg.keep_tombstones and not allow_no_tombstones:
+    resurrect the key. Readers must filter is_deleted.
+
+    ``cfg.rebucket_above_rows`` works as in ``replay``: checked once at
+    start from the footers, then after every micro-batch's apply."""
+    if not cfg.keep_tombstones:
         import dataclasses
         import logging
 
         logging.getLogger("wage_etl_spark.streaming").warning(
-            "start_stream: forcing keep_tombstones=True (micro-batches are "
-            "unordered; pass allow_no_tombstones=True to override)"
+            "start_stream: forcing keep_tombstones=True (micro-batches are unordered)"
         )
         cfg = dataclasses.replace(cfg, keep_tombstones=True)
     target, dlq, manifest = open_tables(spark, cfg)
+    if cfg.rebucket_above_rows is not None:
+        # roll a torn batch back first: its files must not be rebucketed
+        # under the committed epoch's tag
+        last = last_committed_epoch(manifest)
+        _rollback_orphans(target, last)
+        _rollback_orphans(dlq, last)
+        rebucket_at_start(cfg, target, last)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         last = last_committed_epoch(manifest)
         if batch_id <= last:
             return  # already fully committed: replayed foreachBatch is a no-op
-        from wage_etl_spark.streaming.replay import _rollback_orphans
-
         _rollback_orphans(target, last)
         _rollback_orphans(dlq, last)
         if "epoch" in batch_df.columns:
             batch_df = batch_df.drop("epoch")
-        apply_epoch(
+        res = apply_epoch(
             spark, cfg, target, dlq, manifest,
             batch_df, epoch=batch_id, run_id=batch_id + 1,
         )
+        if cfg.rebucket_above_rows is not None:
+            maybe_rebucket(cfg, target, res["max_bucket_rows"], batch_id)
 
     writer = events_stream.writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_dir

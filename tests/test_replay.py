@@ -453,3 +453,26 @@ def test_sparse_shuffle_epoch_precollapses_in_pruned_plan(spark, warehouse, monk
     report = verify_state(spark, target, sha_map(oracle_state))
     assert report["equal"], {k: report[k] for k in ("n_missing", "n_extra", "n_mismatched")}
     assert dlq.read().count() == n_quar
+
+
+def test_path_epoch_is_sized_from_its_own_bytes(spark, tmp_path):
+    """A path-backed epoch reads its own ``epoch=`` directory, so the size
+    estimate that sizes the kernel's shuffle is the epoch's bytes, not the
+    whole event log's; its rows and schema are the filtered read's."""
+    ev = synthesize_events(spark, n_events=200_000, n_keys=5_000, n_epochs=1)
+    ev = ev.withColumn("epoch", F.when(F.col("event_seq") < 15, 1).otherwise(0).cast("long"))
+    path = str(tmp_path / "events")
+    ev.write.partitionBy("epoch").parquet(path)
+    src = EpochSource.from_parquet(spark, path)
+
+    def est(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    one = src.epochs(1, 1)
+    assert est(src._df.filter("epoch = 1")) > 1 << 20  # the whole directory
+    assert est(one) < 1 << 20
+    assert one.schema == src._df.schema
+    assert sorted(map(repr, one.collect())) == sorted(map(repr, src._df.filter("epoch = 1").collect()))
+    assert one.count() == 15
+    # a range with no directory falls back to the (empty) filtered read
+    assert src.epochs(5, 6).count() == 0

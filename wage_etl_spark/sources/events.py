@@ -85,14 +85,30 @@ class EpochSource:
         return self.epochs(e, e)
 
     def epochs(self, a: int, b: int) -> DataFrame:
-        """Events of epochs ``a..b`` inclusive, one scan, partition-pruned
-        when the backing parquet is written ``partitionBy("epoch")`` (the
-        filter reaches the scan) — the unit of one apply
-        (ReplayConfig.catch_up_epochs). A column is dropped only if it is
-        dead in EVERY epoch of the range (a column introduced mid-range
-        stays, null before its first epoch — the same rows a per-epoch
-        replay produces after schema merge)."""
-        df = self._df.filter((F.col("epoch") >= a) & (F.col("epoch") <= b))
+        """Events of epochs ``a..b`` inclusive, one scan — the unit of one
+        apply (ReplayConfig.catch_up_epochs). A source backed by a local
+        ``partitionBy("epoch")`` directory reads only the range's existing
+        ``epoch=`` directories (``basePath`` set, the source's schema), so
+        the optimizer's size estimate, which sizes the kernel's shuffle
+        (``plans.partitioning.shuffle_width``), is the range's bytes: a
+        filter on the whole directory estimates the whole stream (Spark
+        prunes partitions in the estimate only for catalog tables). Other
+        sources are filtered. A column is dropped only if it is dead in
+        EVERY epoch of the range (a column introduced mid-range stays, null
+        before its first epoch — the same rows a per-epoch replay produces
+        after schema merge)."""
+        import os
+
+        dirs = [os.path.join(self._path, f"epoch={e}") for e in range(a, b + 1)] if self._path else []
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        if dirs:
+            df = (
+                self._df.sparkSession.read.schema(self._df.schema)
+                .option("basePath", self._path)
+                .parquet(*dirs)
+            )
+        else:
+            df = self._df.filter((F.col("epoch") >= a) & (F.col("epoch") <= b))
         dead = set(self._dead_columns(a))
         for e in range(a + 1, b + 1):
             dead &= set(self._dead_columns(e))
